@@ -47,6 +47,13 @@ final case class TableResult(
   *      .limit(n), early-terminating (ValidatorTable.scala:154-187).
   *   5. costly checks (uniqueCheck) — own pass + shuffle each
   *      (UniqueCheck.scala:34-49).
+  *
+  * Passes 1–4 form a chain: each needs the one before. A uniqueCheck needs
+  * only the source, so every pass 5 starts when the table's run starts and
+  * runs beside the chain ([[Parallel]]); their Spark jobs share the
+  * cluster. `run` opens the table's source itself; [[graft.Main]] opens it
+  * once for configCheck and hands the opened table in
+  * ([[graft.model.TableSpec.opened]]).
   */
 object Runner {
 
@@ -76,6 +83,19 @@ object Runner {
     require(dups.isEmpty, s"duplicate check labels: ${dups.mkString(", ")} — " +
       "aggregate columns are keyed by label; give same-type checks distinct labels")
     val df = table.open(spark)
+    val uniques = table.checks.collect { case u: UniqueCheck => u }
+    // Each pass returns its share of the table's result. A uniqueCheck
+    // needs nothing but the source, so it starts beside the scan passes,
+    // whose share, with the row count and error details, comes first.
+    Parallel.map(spark, None +: uniques.map(Some(_))) {
+      case None => scanPasses(table, df, detailedErrors, numErrorsToReport, numKeyCols)
+      case Some(u) => uniquePass(table.name, df, u)
+    }.reduce((a, b) => a.copy(results = a.results ++ b.results, timings = a.timings ++ b.timings))
+  }
+
+  /** Passes 1–4: each depends on the one before, so they run in order. */
+  private def scanPasses(table: TableSpec, df: DataFrame, detailedErrors: Boolean,
+      numErrorsToReport: Int, numKeyCols: Int): TableResult = {
     val timings = scala.collection.mutable.Map[String, Long]()
     def timed[T](k: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f; timings(k) = System.nanoTime() - t0; r
@@ -83,7 +103,6 @@ object Runner {
 
     val rowChecks = table.checks.collect { case rc: RowCheckSpec => rc }
     val colStats = table.checks.collect { case cs: ColStats => cs }
-    val uniques = table.checks.collect { case u: UniqueCheck => u }
 
     // ---- pass 1 (colstats only): one job for ALL colstats columns
     val firstPass: Map[String, (Long, Double, Double, Double)] =
@@ -163,19 +182,21 @@ object Runner {
         errorDetailsDF(df, keys, failedRowChecks, numErrorsToReport).collect().toSeq
       }
 
-    // ---- costly checks: uniqueCheck, one pass + shuffle each
-    val uniqueResults = uniques.map { u =>
-      timed(s"unique_${u.label}") {
-        val dupKeys = df.select(u.columns.map(col): _*)
-          .groupBy(u.columns.map(col): _*).count()
-          .where(col("count") > 1).count()
-        CheckResult(u.label, dupKeys > 0,
-          Map("columns" -> u.columns, "duplicatedKeys" -> dupKeys),
-          s"uniqueCheck(${u.columns.mkString(",")}): $dupKeys duplicated key combinations")
-      }
-    }
+    TableResult(table.name, rowCount, results, details, timings.toMap)
+  }
 
-    TableResult(table.name, rowCount, results ++ uniqueResults, details, timings.toMap)
+  /** Pass 5, one per uniqueCheck: its own scan + shuffle. Its share of the
+    * table's result is its verdict and its timer. */
+  private def uniquePass(table: String, df: DataFrame, u: UniqueCheck): TableResult = {
+    val t0 = System.nanoTime()
+    val dupKeys = df.select(u.columns.map(col): _*)
+      .groupBy(u.columns.map(col): _*).count()
+      .where(col("count") > 1).count()
+    TableResult(table, 0L,
+      Seq(CheckResult(u.label, dupKeys > 0,
+        Map("columns" -> u.columns, "duplicatedKeys" -> dupKeys),
+        s"uniqueCheck(${u.columns.mkString(",")}): $dupKeys duplicated key combinations")),
+      Nil, Map(s"unique_${u.label}" -> (System.nanoTime() - t0)))
   }
 
   /** ColStats pass-2 aggregate columns riding the fused pass: sum of squared

@@ -67,6 +67,9 @@ object Ivf {
       maxTrainRows: Int = 1 << 16, materialize: Boolean = true): DataFrame = {
     require(trainFraction > 0.0 && trainFraction <= 1.0,
       s"trainFraction must be in (0, 1], got $trainFraction")
+    require(nLists > 1, s"nLists must be > 1, got $nLists")
+    require(nProbe >= 1 && nProbe <= nLists,
+      s"nProbe must be in [1, nLists=$nLists], got $nProbe")
     val spark = corpus.sparkSession
 
     val sampled = Pq.collectSample(corpus, vecCol, trainFraction, seed, maxTrainRows)

@@ -361,7 +361,8 @@ case class PqEncode(child: Expression, cb: Pq.Codebooks)
   * dim-ascending `acc + diff²`, float elements widened per element), so
   * the selected lists and their tie-breaks are bit-identical to the
   * crossJoin + `row_number over (dist, list)` probe rank this replaces.
-  * Null / wrong-dimension vectors → null (the unsearchable contract). */
+  * Null / wrong-dimension vectors, and vectors with a null element, →
+  * null (the unsearchable contract). */
 case class PqEncodeTop(child: Expression, cb: Pq.Codebooks, n: Int)
     extends UnaryExpression with UnaryKernelCodegen {
 
@@ -383,6 +384,8 @@ case class PqEncodeTop(child: Expression, cb: Pq.Codebooks, n: Int)
     val v = input.asInstanceOf[ArrayData]
     val Pq.Codebooks(_, ksub, dsub, flat) = cb
     if (v.numElements() != dsub) return null
+    var e = 0
+    while (e < dsub) { if (v.isNullAt(e)) return null; e += 1 }
     val dist = new Array[Double](ksub)
     var t = 0
     while (t < ksub) {

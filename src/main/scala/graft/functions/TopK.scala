@@ -30,7 +30,8 @@ import org.apache.spark.sql.types._
   * value is bit-identical to the window's sort key) and whose SECOND
   * field is the orderable tie-break id. Entries are kept under
   * (score DESC, id ASC) with the window's null semantics exactly
-  * (DESC ⇒ NULL scores last; NaN greatest; -0.0 < 0.0 — all via
+  * (DESC ⇒ NULL scores last; ASC ⇒ NULL ids first; NaN greatest;
+  * -0.0 < 0.0 — all via
   * java.lang.Double.compare on the non-null branch, Spark's physical
   * double ordering). Result: array<input struct> in that order,
   * length ≤ k — `explode` restores the row form, and the kept set is
@@ -69,7 +70,8 @@ case class TopKByScoreAgg(
   @transient private lazy val idOrdering =
     TypeUtils.getInterpretedOrdering(idType)
 
-  /** (score DESC NULLS LAST, id ASC) — the window's orderBy exactly. */
+  /** (score DESC NULLS LAST, id ASC NULLS FIRST) — the window's orderBy
+    * exactly. */
   private def lessThan(a: InternalRow, b: InternalRow): Boolean = {
     val an = a.isNullAt(0); val bn = b.isNullAt(0)
     val c =
@@ -78,6 +80,8 @@ case class TopKByScoreAgg(
       else if (bn) -1
       else java.lang.Double.compare(b.getDouble(0), a.getDouble(0)) // DESC
     if (c != 0) c < 0
+    else if (a.isNullAt(1) || b.isNullAt(1))
+      a.isNullAt(1) && !b.isNullAt(1) // null id sorts BEFORE any id under ASC
     else idOrdering.compare(a.get(1, idType), b.get(1, idType)) < 0
   }
 
@@ -163,7 +167,8 @@ case class TopKByScoreAgg(
 
 object TopK {
   /** Aggregate Column: the k entries of `entry` (struct<score: double,
-    * id: orderable, …>) best under (score DESC NULLS LAST, id ASC), as
+    * id: orderable, …>) best under (score DESC NULLS LAST, id ASC NULLS
+    * FIRST), as
     * array<entry struct> in that order. */
   def topKByScore(entry: Column, k: Int): Column =
     GraftColumn(TopKByScoreAgg(GraftColumn.expr(entry), k).toAggregateExpression())

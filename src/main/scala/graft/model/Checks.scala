@@ -153,6 +153,12 @@ final case class TableSpec(
     condition.fold(df)(df.where)
   }
 
+  /** This table with its source already opened as `df` (the result of
+    * [[open]], condition applied): opening it again costs no job, which
+    * for a file source saves a schema-inference job. */
+  def opened(df: org.apache.spark.sql.DataFrame): TableSpec =
+    copy(load = _ => df, condition = None)
+
   /** First numKeyCols columns unless keyColumns given (ValidatorTable.scala:24-31). */
   def keys(schema: org.apache.spark.sql.types.StructType, numKeyCols: Int): Seq[String] =
     keyColumns.getOrElse(schema.fieldNames.take(numKeyCols).toSeq)

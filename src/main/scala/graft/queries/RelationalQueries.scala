@@ -35,6 +35,30 @@ object RelationalQueries {
         col("c_ts").isNotNull.as("is_event"))
   }
 
+  /** Stages a streaming query's input: copies `src` — one file, or a
+    * directory tree such as a dataset Spark wrote — to `dst`, replacing
+    * whatever `dst` held. Copied unconditionally: a stale staged copy
+    * after an in-place fixture regen would silently diverge from the
+    * DuckDB oracle. */
+  private[graft] def stageCopy(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    def walk(p: java.nio.file.Path) =
+      scala.util.Using.resource(Files.walk(p))(_.iterator.asScala.toList)
+    if (Files.exists(dst)) walk(dst).reverse.foreach(p => Files.delete(p))
+    walk(src).foreach { p =>
+      val to = dst.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(to) else Files.copy(p, to)
+    }
+  }
+
+  /** A file stream over a directory [[stageCopy]] staged into. The lookup
+    * is recursive: a staged dataset directory keeps its files one level
+    * down, where a flat listing would see no file at all. */
+  private def stagedStream(s: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      stage: java.io.File): DataFrame =
+    s.readStream.schema(schema).option("recursiveFileLookup", "true").parquet(stage.getPath)
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Broadcast dim join: orders ⋈ customer ⋈ nation, revenue per nation.
     // Dims broadcast → the fact side never shuffles for the join.
@@ -215,18 +239,14 @@ object RelationalQueries {
       val stage = new java.io.File(
         s"/root/repo/target/fixtures/$dirKey/events_stream")
       val staged = new java.io.File(stage, "events.parquet")
-      // copy unconditionally: a stale staged copy after an in-place
-      // fixture regen would silently diverge from the DuckDB oracle
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), staged.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"), staged.toPath)
       // same raw schema + ts normalization as the batch loader
       // (Sources.table): nanos-as-long and µs-NTZ encodings both map to
       // the session-timezone TimestampType the window/watermark ops need
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       val stream = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .select("ts", "event_type", "value")
       val counted = stream
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
@@ -265,12 +285,10 @@ object RelationalQueries {
         s"/root/repo/target/fixtures/$dirKey/events_stream")
       val staged = new java.io.File(stage, "events.parquet")
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), staged.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"), staged.toPath)
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       val stream = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .select("event_type", "user_id")
       val counted = stream.groupBy(col("event_type"), col("user_id"))
         .agg(count(lit(1L)).as("n"))
@@ -317,13 +335,11 @@ object RelationalQueries {
       val stage = new java.io.File(
         s"/root/repo/target/fixtures/$dirKey/events_stream_j")
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        new java.io.File(stage, "events.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+        new java.io.File(stage, "events.parquet").toPath)
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       def src = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .select("ts", "user_id", "event_type")
       val views = src.where(col("event_type") === "view")
         .select(col("user_id"), col("ts").as("v_ts"))
@@ -538,13 +554,11 @@ object RelationalQueries {
       val stage = new java.io.File(
         s"/root/repo/target/fixtures/$dirKey/events_stream")
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        new java.io.File(stage, "events.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+        new java.io.File(stage, "events.parquet").toPath)
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       val stream = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .where(col("user_id") < 8 && col("value").isNotNull)
         .select(col("user_id").cast("string"), col("event_id"), col("value"))
         .as[(String, Long, Double)]
@@ -1663,10 +1677,8 @@ object RelationalQueries {
       val stage = new java.io.File(
         s"/root/repo/target/fixtures/$dirKey/events_stream_d")
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        new java.io.File(stage, "events.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+        new java.io.File(stage, "events.parquet").toPath)
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       // append-mode sessions only emit once the watermark passes their
       // end — the globally-latest session never would. A sentinel
@@ -1679,7 +1691,7 @@ object RelationalQueries {
           (col("ts") + expr("INTERVAL 2 HOURS")).as("ts"))
         .coalesce(1).write.mode("overwrite").parquet(flushDir.getPath)
       val main = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .select(col("user_id"), col("event_type"), col("ts"))
       val flush = s.readStream
         .schema(s.read.parquet(flushDir.getPath).schema)
@@ -1883,13 +1895,11 @@ object RelationalQueries {
       val stage = new java.io.File(
         s"/root/repo/target/fixtures/$dirKey/events_stream_e")
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        new java.io.File(stage, "events.parquet").toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+        new java.io.File(stage, "events.parquet").toPath)
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       val src = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .select(col("event_id"), col("user_id"))
       val dim = t(s, dir, "customer")
         .select(col("c_custkey").as("user_id"), col("c_mktsegment"))
@@ -2553,12 +2563,10 @@ object RelationalQueries {
         s"/root/repo/target/fixtures/$dirKey/events_upsert")
       val staged = new java.io.File(stage, "events.parquet")
       stage.mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"), staged.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageCopy(java.nio.file.Paths.get(s"$dir/events.parquet"), staged.toPath)
       val raw = s.read.parquet(s"$dir/events.parquet").schema
       val stream = graft.sources.Sources.normalizeEventTs(
-          s.readStream.schema(raw).parquet(stage.getPath))
+          stagedStream(s, raw, stage))
         .select("user_id", "event_id", "ts", "event_type", "value")
       val latest = stream.groupBy(col("user_id"))
         .agg(max_by(

@@ -61,7 +61,8 @@ object JsonReport {
   }
 
   /** Table events: per-stage ns timers (configCheck/firstPass/quickPass/
-    * errorDetails/uniqueCheck — ValidatorTimer, ValidatorEvent.scala:52-73)
+    * errorDetails/uniqueCheck — ValidatorTimer, ValidatorEvent.scala:52-73;
+    * `graft.Main` records configCheck, [[graft.exec.Runner.run]] the passes)
     * + one quickCheckError per captured error-detail row. */
   def tableEvents(t: TableResult): Seq[String] = {
     val timers = t.timings.toSeq.sortBy(_._1).map { case (label, ns) =>

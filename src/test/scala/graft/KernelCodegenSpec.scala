@@ -152,6 +152,20 @@ class KernelCodegenSpec extends SparkSuite {
       s"rank-1 probe must equal the assigned cell: $r"))
   }
 
+  test("pq_encode_top: a vector with a NULL element gets a NULL probe list") {
+    val cb1 = Pq.Codebooks(1, 6, 4,
+      Array.tabulate(6 * 4)(i => (i % 5).toFloat - 2f))
+    val vecs = Seq(
+      (1L, Seq(Some(0.5), None, Some(1.0), Some(0.0))),
+      (2L, Seq(Some(0.5), Some(0.0), Some(1.0), Some(0.0)))
+    ).toDF("id", "v")
+    def probes = vecs.orderBy("id").select(Pq.encodeTop(col("v"), cb1, 3).as("probes"))
+    assertParity("pq-encode-top-null-element")(probes)
+    val got = probes.collect()
+    assert(got(0).isNullAt(0), s"NULL element scored as a value: ${got(0)}")
+    assert(!got(1).isNullAt(0))
+  }
+
   test("bridged kernels fuse into whole-stage codegen stages") {
     // The point of the bridge: a CodegenFallback expression excluded its
     // WHOLE operator from WholeStageCodegen (CollapseCodegenStages

@@ -983,6 +983,17 @@ class PipelineSpec extends SparkSuite {
     assert(recall >= 0.6, s"IVF recall too low: $recall")
   }
 
+  test("ivfKnn rejects nProbe outside [1, nLists] in its own words") {
+    val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    val q = emb.where(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    Seq(0, 17).foreach { p =>
+      val e = intercept[IllegalArgumentException](graft.functions.Ivf
+        .ivfKnn(emb, "vec_id", "embedding", q, "qid", "qvec", k = 1, nLists = 16, nProbe = p))
+      assert(e.getMessage.contains(s"nProbe must be in [1, nLists=16], got $p"), e.getMessage)
+    }
+  }
+
   test("ANN self-join recall vs brute force on sf0.001") {
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     // ground truth: for each vector, its true nearest neighbor

@@ -511,4 +511,35 @@ class StreamingSpec extends SparkSuite {
     }
     assert(spark.conf.get(key) == before, "restored on failure too")
   }
+
+  test("stageCopy: a directory tree replaces whatever the target held") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_stage")
+    val src = root.resolve("src")
+    Files.createDirectories(src.resolve("sub"))
+    Files.writeString(src.resolve("part-0"), "a")
+    Files.writeString(src.resolve("sub/part-1"), "b")
+    val dst = root.resolve("dst")
+    Files.createDirectories(dst)
+    Files.writeString(dst.resolve("stale"), "old")
+    graft.queries.RelationalQueries.stageCopy(src, dst)
+    assert(Files.readString(dst.resolve("part-0")) == "a")
+    assert(Files.readString(dst.resolve("sub/part-1")) == "b")
+    assert(!Files.exists(dst.resolve("stale")))
+    // a single file replaces a staged directory
+    graft.queries.RelationalQueries.stageCopy(src.resolve("part-0"), dst)
+    assert(Files.isRegularFile(dst) && Files.readString(dst) == "a")
+  }
+
+  test("a stream over events written as a dataset directory drains every row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stage_events").toFile
+    spark.read.parquet(s"$sf0001/events.parquet").repartition(3)
+      .write.parquet(s"$dir/events.parquet")
+    val q = SparkEntry.queries("q_stream_parity")
+    def counts(d: String) =
+      q(spark, d).select("w_start", "event_type", "n").collect().map(_.toString).toSeq
+    val fromFile = counts(sf0001)
+    assert(fromFile.nonEmpty)
+    assert(counts(dir.getPath) == fromFile)
+  }
 }

@@ -61,4 +61,12 @@ class TopKSpec extends SparkSuite {
       .toDF("g", "id", "s").select(col("g"), col("id"), col("s").cast("double").as("s"))
     assertSame(tiny, 4, "groups smaller than k")
   }
+
+  test("top-k aggregate == window rank cut: NULL ids sort first among tied scores") {
+    val df = Seq(
+        ("a", Some("x"), 1.0), ("a", None, 1.0), ("a", Some("y"), 2.0), ("a", Some("w"), 1.0),
+        ("b", None, 0.5), ("b", None, 0.5), ("b", Some("v"), 0.5))
+      .toDF("g", "id", "s")
+    assertSame(df, 2, "null ids")
+  }
 }
