@@ -108,14 +108,7 @@ object Bench {
     val loadStart = loadAvg
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus)
     val selected =
       if (sys.env.get("SPARK_GRAFT_SCALE_ONLY").contains("1"))
         Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
@@ -259,14 +252,7 @@ object Bench {
         // start-wait, so the scale rows start as calm as the main run.
         scaleWaitSec = waitForCalm(300, stepSec = 15)
         scaleStartLoad = loadAvg
-        val s2 = SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        s2.sparkContext.setLogLevel("WARN")
+        val s2 = SparkEntry.localSession(cpus)
         try {
           import org.apache.spark.sql.functions.{col, lit}
           val docs = graft.sources.Sources.table(s2, sfDir, "documents")

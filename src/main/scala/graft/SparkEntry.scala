@@ -22,6 +22,21 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CheckQueries.queries ++ RelationalQueries.queries ++ PipelineQueries.queries
 
+  /** The dev tools' local session (Bench, Verify, DumpPlans, ScaleData):
+    * `local[cpus]` with `cpus` shuffle partitions, UTC session time zone,
+    * parquet nanos read as long, no UI, WARN logging. */
+  def localSession(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** The half-boundary-exposed regression-family oracles go through
     * [[queries.OracleRounding]] so DuckDB rounds the same digits Spark
     * does (VERDICT r13 #1/#2). */

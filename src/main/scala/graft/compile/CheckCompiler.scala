@@ -75,8 +75,8 @@ object CheckCompiler {
     * The limit expression mirrors Threshold.errorLimit TERM FOR TERM —
     * same FP association (value * (rowCount / 100.0)) and the same
     * truncation (`cast(long)` truncates toward zero for non-negative
-    * values, matching `.toLong`) — so the in-plan verdict can never
-    * disagree with the driver path at an exact FP boundary. */
+    * values, matching `.toLong`) — so the verdict agrees, at an exact FP
+    * boundary too, with the `errorLimit` the report prints beside it. */
   def failedExpr(check: RowCheckSpec, rowCount: Column): Column = {
     val t = check.thresholdOrZero
     val limit =
@@ -87,6 +87,37 @@ object CheckCompiler {
       else lit(t.value.toLong)
     (col(s"${check.label}_errs") > limit).as(s"${check.label}_failed")
   }
+
+  /** A check's verdict column `<label>_failed`, evaluated INSIDE the plan
+    * on the fused pass's aggregated row ([[fusedAggColumn]]'s columns plus
+    * `rowCount`). This is the only verdict implementation: the CLI run,
+    * the registry and the streaming monitor all execute it.
+    *
+    * Empty-input verdicts are definite booleans, not NULL (aggregates over
+    * zero rows yield NULL, and a NULL comparison would leak through as a
+    * non-verdict): row checks pass on an empty table (the reference only
+    * evaluates them when count > 0, RowBased.scala:80-82); colmax fails
+    * (no max to equal the expectation); colsum compares a NULL sum as 0.
+    * A string expectation on a temporal column compares as that date or
+    * timestamp (Catalyst's string→temporal coercion). UniqueCheck runs its
+    * own pass and ColStats never fails, so neither has a verdict here. */
+  def verdict(check: CheckSpec, rowCount: Column): Option[Column] = (check match {
+    case rc: RowCheckSpec => Some(coalesce(failedExpr(rc, rowCount), lit(false)))
+    case MinNumRows(minRows, _) => Some(rowCount < lit(minRows))
+    case ColumnMaxCheck(_, expected, l) =>
+      val actual = col(s"${l}_max")
+      Some(coalesce(expected match {
+        case Bound.Num(v) => actual.cast(DoubleType) =!= lit(v)
+        case Bound.Str(s) => actual =!= lit(s)
+        case Bound.Ref(c) => throw new IllegalArgumentException(s"columnMaxCheck expected cannot be a column ref: $c")
+      }, lit(true)))
+    case ColumnSumCheck(_, mn, mx, inclusive, l) =>
+      val s = coalesce(col(s"${l}_sum").cast(DoubleType), lit(0.0))
+      val lo = mn.map(m => if (inclusive) s < lit(m) else s <= lit(m))
+      val hi = mx.map(m => if (inclusive) s > lit(m) else s >= lit(m))
+      Some((lo ++ hi).reduce(_ || _))
+    case _: UniqueCheck | _: ColStats => None
+  }).map(_.as(s"${check.label}_failed"))
 
   /** Config-time (metadata-only) validation of a check against a schema —
     * mirrors the reference's configCheck (ValidatorTable.scala:50-74,
@@ -146,6 +177,8 @@ object CheckCompiler {
         }
         field(c).swap.toSeq ++ reErr ++ typeErr ++ badThreshold(t)
       case _: MinNumRows => Nil
+      case ColumnMaxCheck(c, Bound.Ref(_), _) =>
+        field(c).swap.toSeq :+ "columnMaxCheck value cannot be a column reference"
       case ColumnMaxCheck(c, expected, _) =>
         val typeErr = field(c).toSeq.flatMap { f =>
           expected match {

@@ -42,7 +42,12 @@ final case class TableResult(
   *      aggregates, so Catalyst fuses them into a single partial→final
   *      HashAggregate: at 100 TB this is one data pass with only a 1-row
   *      driver result.
-  *   3. driver verdicts on the single result row.
+  *   3. verdicts, computed in-plan: the quick pass IS the [[verdictDF]]
+  *      plan (verdict columns from [[CheckCompiler.verdict]]), and each
+  *      uniqueCheck pass the [[uniqueDF]] plan, so the CLI executes the
+  *      same plans as the registry and the streaming monitor. The driver
+  *      reads each `<label>_failed` flag and only formats messages and
+  *      metrics around it.
   *   4. (conditional) error-detail pass — filter(or of failed predicates)
   *      .limit(n), early-terminating (ValidatorTable.scala:154-187).
   *   5. costly checks (uniqueCheck) — own pass + shuffle each
@@ -105,68 +110,51 @@ object Runner {
     val colStats = table.checks.collect { case cs: ColStats => cs }
 
     // ---- pass 1 (colstats only): one job for ALL colstats columns
-    val firstPass: Map[String, (Long, Double, Double, Double)] =
-      if (colStats.isEmpty) Map.empty
-      else timed("firstPass") {
-        val cols = colStats.flatMap { cs =>
-          val c = col(cs.column).cast(DoubleType)
-          Seq(count(c).as(s"${cs.label}_cnt"), avg(c).as(s"${cs.label}_mean"),
-              min(c).as(s"${cs.label}_min"), max(c).as(s"${cs.label}_max"))
-        }
-        val row = df.agg(cols.head, cols.tail: _*).head()
-        colStats.zipWithIndex.map { case (cs, i) =>
-          // Empty table / all-NULL column: avg/min/max aggregate to NULL —
-          // report count=0 stats instead of crashing on getDouble.
-          if (row.getLong(4 * i) == 0L || row.isNullAt(4 * i + 1))
-            cs.label -> (0L, 0.0, 0.0, 0.0)
-          else
-            cs.label -> (row.getLong(4 * i), row.getDouble(4 * i + 1),
-                         row.getDouble(4 * i + 2), row.getDouble(4 * i + 3))
-        }.toMap
-      }
+    val firstPass =
+      if (colStats.isEmpty) Map.empty[String, (Long, Double, Double, Double)]
+      else timed("firstPass")(firstPassStats(df, colStats))
 
-    // ---- fused quick pass
-    val aggCols: Seq[Column] =
-      count(lit(1L)).as("row_cnt") +:
-      (table.checks.flatMap(CheckCompiler.fusedAggColumn) ++
-       colStats.flatMap(cs => secondPassCols(cs, firstPass(cs.label))))
-    val row = timed("quickPass") { df.agg(aggCols.head, aggCols.tail: _*).head() }
+    // ---- fused quick pass: the verdictDF plan, colstats pass 2 riding along
+    val row = timed("quickPass") {
+      verdictPlan(df, table.checks,
+        colStats.flatMap(cs => secondPassCols(cs, firstPass(cs.label)))).head()
+    }
     val rowCount = row.getLong(row.fieldIndex("row_cnt"))
+    def failed(label: String): Boolean = row.getBoolean(row.fieldIndex(s"${label}_failed"))
 
-    // ---- driver verdicts
+    // ---- results: verdicts from the row, messages and metrics around them
     val results = table.checks.collect {
       case rc: RowCheckSpec =>
         val errs = longAt(row, s"${rc.label}_errs")
         val limit = rc.thresholdOrZero.errorLimit(rowCount)
-        CheckResult(rc.label, errs > limit,
+        val f = failed(rc.label)
+        CheckResult(rc.label, f,
           Map("errorCount" -> errs, "errorLimit" -> limit, "column" -> rc.column),
-          if (errs > limit) s"${rc.label} failed: $errs errors > limit $limit"
+          if (f) s"${rc.label} failed: $errs errors > limit $limit"
           else s"${rc.label} ok: $errs errors <= limit $limit")
       case MinNumRows(minRows, label) =>
-        val failed = rowCount < minRows
+        val f = failed(label)
         val relErr = if (minRows == 0) 0.0 else (minRows - rowCount).toDouble / minRows * 100.0
-        CheckResult(label, failed,
+        CheckResult(label, f,
           Map("rowCount" -> rowCount, "minNumRows" -> minRows,
-              "relativeErrorPct" -> (if (failed) relErr else 0.0)),
-          if (failed) f"rowCount $rowCount < $minRows ($relErr%.2f%% short)"
+              "relativeErrorPct" -> (if (f) relErr else 0.0)),
+          if (f) f"rowCount $rowCount < $minRows ($relErr%.2f%% short)"
           else s"rowCount $rowCount >= $minRows")
       case ColumnMaxCheck(c, expected, label) =>
         val actual = row.get(row.fieldIndex(s"${label}_max"))
-        val (failed, msg) = compareMax(actual, expected)
-        CheckResult(label, failed, Map("column" -> c, "actual" -> actual), msg)
-      case csc @ ColumnSumCheck(c, mn, mx, inclusive, label) =>
+        val f = failed(label)
+        CheckResult(label, f, Map("column" -> c, "actual" -> actual), maxMessage(actual, expected, f))
+      case ColumnSumCheck(c, mn, mx, inclusive, label) =>
         val actual = numAt(row, s"${label}_sum")
-        val lowBad = mn.exists(m => if (inclusive) actual < m else actual <= m)
-        val highBad = mx.exists(m => if (inclusive) actual > m else actual >= m)
-        val failed = lowBad || highBad
-        CheckResult(label, failed,
+        val f = failed(label)
+        CheckResult(label, f,
           Map("column" -> c, "actual" -> actual) ++ mn.map("min" -> _) ++ mx.map("max" -> _),
-          s"$label ${if (failed) "failed" else "ok"}: sum($c) = $actual, bounds ($mn, $mx) inclusive=$inclusive")
+          s"$label ${if (f) "failed" else "ok"}: sum($c) = $actual, bounds ($mn, $mx) inclusive=$inclusive")
       case cs: ColStats =>
         val (cnt, mean, mn, mx) = firstPass(cs.label)
         val ssq = numAt(row, s"${cs.label}_ssq")
         val stdDev = if (cnt > 1) math.sqrt(ssq / (cnt - 1)) else 0.0 // sample, n-1 (SecondPassStatsAggregator.scala:93)
-        val hist = (0 until NumBins).map(i => longAt(row, s"${cs.label}_b$i"))
+        val hist = (0 until NumBins).map(i => row.getLong(row.fieldIndex(s"${cs.label}_b$i")))
         CheckResult(cs.label, failed = false, // colstats never fails (ColStats.scala:83)
           Map("column" -> cs.column,
               "stats" -> ColumnStats(cnt, mean, mn, mx, stdDev, hist)),
@@ -185,18 +173,37 @@ object Runner {
     TableResult(table.name, rowCount, results, details, timings.toMap)
   }
 
-  /** Pass 5, one per uniqueCheck: its own scan + shuffle. Its share of the
-    * table's result is its verdict and its timer. */
+  /** Pass 5, one per uniqueCheck: the [[uniqueDF]] plan, its own scan +
+    * shuffle. Its share of the table's result is its verdict and its timer. */
   private def uniquePass(table: String, df: DataFrame, u: UniqueCheck): TableResult = {
     val t0 = System.nanoTime()
-    val dupKeys = df.select(u.columns.map(col): _*)
-      .groupBy(u.columns.map(col): _*).count()
-      .where(col("count") > 1).count()
+    val row = uniqueDF(df, u.columns, u.label).head()
+    val dupKeys = row.getLong(row.fieldIndex(s"${u.label}_dup_keys"))
     TableResult(table, 0L,
-      Seq(CheckResult(u.label, dupKeys > 0,
+      Seq(CheckResult(u.label, row.getBoolean(row.fieldIndex(s"${u.label}_failed")),
         Map("columns" -> u.columns, "duplicatedKeys" -> dupKeys),
         s"uniqueCheck(${u.columns.mkString(",")}): $dupKeys duplicated key combinations")),
       Nil, Map(s"unique_${u.label}" -> (System.nanoTime() - t0)))
+  }
+
+  /** ColStats pass 1: count/mean/min/max of every colstats column, ONE job
+    * (ValidatorTable.scala:76-89). An empty table or all-NULL column
+    * aggregates avg/min/max to NULL; it reports (0, 0.0, 0.0, 0.0). */
+  private def firstPassStats(df: DataFrame,
+      colStats: Seq[ColStats]): Map[String, (Long, Double, Double, Double)] = {
+    val cols = colStats.flatMap { cs =>
+      val c = col(cs.column).cast(DoubleType)
+      Seq(count(c).as(s"${cs.label}_cnt"), avg(c).as(s"${cs.label}_mean"),
+          min(c).as(s"${cs.label}_min"), max(c).as(s"${cs.label}_max"))
+    }
+    val row = df.agg(cols.head, cols.tail: _*).head()
+    colStats.zipWithIndex.map { case (cs, i) =>
+      if (row.getLong(4 * i) == 0L || row.isNullAt(4 * i + 1))
+        cs.label -> (0L, 0.0, 0.0, 0.0)
+      else
+        cs.label -> (row.getLong(4 * i), row.getDouble(4 * i + 1),
+                     row.getDouble(4 * i + 2), row.getDouble(4 * i + 3))
+    }.toMap
   }
 
   /** ColStats pass-2 aggregate columns riding the fused pass: sum of squared
@@ -208,7 +215,8 @@ object Runner {
     * every NULL row lands in the top bin — and the binSize=0 literal arm
     * would count NULL rows into bin 0. Caught by CheckFuzzSpec's
     * differential recomputation (seed 0) on a nullable column; the
-    * chk_colstats oracle column happens to be null-free. */
+    * chk_colstats oracle column happens to be null-free. The bins are
+    * `count`s, so an empty table reports 0 in each, as the run does. */
   def secondPassCols(cs: ColStats, fp: (Long, Double, Double, Double)): Seq[Column] = {
     val (_, mean, mn, mx) = fp
     val c = col(cs.column).cast(DoubleType)
@@ -219,43 +227,22 @@ object Runner {
         least(lit(NumBins - 1L), floor((c - lit(mn)) / lit(binSize))))
     sum(pow(c - lit(mean), 2.0)).as(s"${cs.label}_ssq") +:
       (0 until NumBins).map(i =>
-        sum(when(bin === lit(i.toLong), 1L).otherwise(0L)).as(s"${cs.label}_b$i"))
+        count(when(bin === lit(i.toLong), true)).as(s"${cs.label}_b$i"))
   }
 
   /** Fully-declarative one-row verdict DataFrame: the fused aggregate pass
-    * PLUS the verdict booleans computed inside the plan — zero driver-side
-    * data movement, ideal shape for the 100 TB case. */
-  def verdictDF(df: DataFrame, checks: Seq[CheckSpec]): DataFrame = {
-    val rowChecks = checks.collect { case rc: RowCheckSpec => rc }
-    val aggCols = count(lit(1L)).as("row_cnt") +: checks.flatMap(CheckCompiler.fusedAggColumn)
-    val agged = df.agg(aggCols.head, aggCols.tail: _*)
-    // Empty-input verdicts must be definite booleans, not NULL (aggregates
-    // over zero rows yield NULL and a NULL comparison would leak through
-    // as a non-verdict): row checks pass on an empty table (the reference
-    // only evaluates them when count > 0, RowBased.scala:80-82), colmax
-    // fails (no max to equal the expectation — consistent with the driver
-    // path's NULL handling), colsum compares against 0 (the driver path's
-    // numAt default).
-    val verdicts = rowChecks.map(rc =>
-      coalesce(CheckCompiler.failedExpr(rc, col("row_cnt")), lit(false))
-        .as(s"${rc.label}_failed")) ++
-      checks.collect {
-        case MinNumRows(minRows, label) =>
-          (col("row_cnt") < lit(minRows)).as(s"${label}_failed")
-        case ColumnMaxCheck(_, expected, label) =>
-          val actual = col(s"${label}_max")
-          coalesce(expected match {
-            case Bound.Num(v) => actual.cast(DoubleType) =!= lit(v)
-            case Bound.Str(s) => actual =!= lit(s)
-            case Bound.Ref(c) => throw new IllegalArgumentException(s"columnMaxCheck expected cannot be a column ref: $c")
-          }, lit(true)).as(s"${label}_failed")
-        case ColumnSumCheck(_, mn, mx, inclusive, label) =>
-          val s = coalesce(col(s"${label}_sum").cast(DoubleType), lit(0.0))
-          val lo = mn.map(m => if (inclusive) s < lit(m) else s <= lit(m))
-          val hi = mx.map(m => if (inclusive) s > lit(m) else s >= lit(m))
-          (lo ++ hi).reduce(_ || _).as(s"${label}_failed")
-      }
-    agged.select(col("*") +: verdicts: _*)
+    * PLUS the verdict booleans computed inside the plan
+    * ([[CheckCompiler.verdict]]) — zero driver-side data movement, ideal
+    * shape for the 100 TB case. [[run]]'s quick pass executes this plan. */
+  def verdictDF(df: DataFrame, checks: Seq[CheckSpec]): DataFrame = verdictPlan(df, checks, Nil)
+
+  /** [[verdictDF]] with `extraAggs` in the same aggregate: the quick pass
+    * adds the colstats pass-2 columns. Row-check verdicts come first. */
+  private def verdictPlan(df: DataFrame, checks: Seq[CheckSpec], extraAggs: Seq[Column]): DataFrame = {
+    val aggCols = count(lit(1L)).as("row_cnt") +: (checks.flatMap(CheckCompiler.fusedAggColumn) ++ extraAggs)
+    val (rowChecks, others) = checks.partition(_.isInstanceOf[RowCheckSpec])
+    val verdicts = (rowChecks ++ others).flatMap(CheckCompiler.verdict(_, col("row_cnt")))
+    df.agg(aggCols.head, aggCols.tail: _*).select(col("*") +: verdicts: _*)
   }
 
   /** Error-detail pass (ValidatorTable.scala:154-187): keys + offending
@@ -290,12 +277,7 @@ object Runner {
     * engine summing in a different order hashes identically. */
   def colStatsDF(df: DataFrame, column: String): DataFrame = {
     val cs = ColStats(column, "cs")
-    val c = col(column).cast(DoubleType)
-    val fpRow = df.agg(count(c).as("cnt"), avg(c).as("mean"),
-      min(c).as("mn"), max(c).as("mx")).head()
-    val fp =
-      if (fpRow.getLong(0) == 0L || fpRow.isNullAt(1)) (0L, 0.0, 0.0, 0.0)
-      else (fpRow.getLong(0), fpRow.getDouble(1), fpRow.getDouble(2), fpRow.getDouble(3))
+    val fp = firstPassStats(df, Seq(cs))(cs.label)
     val (cnt, mean, mn, mx) = fp
     val aggCols = secondPassCols(cs, fp)
     df.agg(aggCols.head, aggCols.tail: _*).select(
@@ -320,21 +302,18 @@ object Runner {
     }
   }
 
-  /** Driver-side exact-equality compare for columnMaxCheck
-    * (ColumnBased.scala:99-157): numeric via double compare w/ relative
-    * error in the message, string via equality. */
-  private def compareMax(actual: Any, expected: Bound): (Boolean, String) =
+  /** columnMaxCheck's message (ColumnBased.scala:99-157): the relative
+    * error for a numeric expectation, both values otherwise. */
+  private def maxMessage(actual: Any, expected: Bound, failed: Boolean): String =
     (actual, expected) match {
-      case (null, _) => (true, "columnMaxCheck: max is NULL (empty input?)")
+      case (null, _) => "columnMaxCheck: max is NULL (empty input?)"
       case (a: java.lang.Number, Bound.Num(e)) =>
         val av = a.doubleValue()
-        val failed = av != e
         val relPct = if (e != 0.0) (av - e) / e * 100.0 else Double.NaN
-        (failed,
-         if (failed) f"columnMaxCheck failed: max $av != expected $e (${relPct}%.2f%% off)"
-         else s"columnMaxCheck ok: max = $av")
-      case (a: String, Bound.Str(e)) =>
-        (a != e, s"columnMaxCheck ${if (a != e) "failed" else "ok"}: max '$a' vs expected '$e'")
-      case (a, e) => (true, s"columnMaxCheck: type mismatch actual=$a expected=$e")
+        if (failed) f"columnMaxCheck failed: max $av != expected $e (${relPct}%.2f%% off)"
+        else s"columnMaxCheck ok: max = $av"
+      case (a, e) =>
+        val ev = e match { case Bound.Num(v) => v; case Bound.Str(v) => v; case Bound.Ref(c) => c }
+        s"columnMaxCheck ${if (failed) "failed" else "ok"}: max '$a' vs expected '$ev'"
     }
 }

@@ -295,6 +295,16 @@ object Pq {
     scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 
+  /** True if any element is NULL. A vector or code list with a NULL
+    * element has no distance and no centroid, so every PQ kernel returns
+    * NULL for it (the unsearchable contract), instead of reading the NULL
+    * slot as 0. */
+  private[functions] def hasNullElement(arr: ArrayData): Boolean = {
+    var i = 0
+    while (i < arr.numElements()) { if (arr.isNullAt(i)) return true; i += 1 }
+    false
+  }
+
   /** Read element `i` of a float/double array column as double. */
   private[functions] def elemAsDouble(arr: ArrayData, i: Int, isFloat: Boolean): Double =
     if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
@@ -310,7 +320,8 @@ object Pq {
   * index wins ties — deterministic). Native expression: the argmin is a
   * tight m·ksub·dsub loop per row against a codebook array that lives
   * once per task; a HOF composition would rebuild the codebook literal
-  * per element (no CSE for interpreted HOFs). */
+  * per element (no CSE for interpreted HOFs). Null / wrong-dimension
+  * vectors, and vectors with a null element, → null. */
 case class PqEncode(child: Expression, cb: Pq.Codebooks)
     extends UnaryExpression with UnaryKernelCodegen {
 
@@ -327,7 +338,7 @@ case class PqEncode(child: Expression, cb: Pq.Codebooks)
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     val Pq.Codebooks(m, ksub, dsub, flat) = cb
-    if (v.numElements() != m * dsub) return null
+    if (v.numElements() != m * dsub || Pq.hasNullElement(v)) return null
     val codes = new Array[Int](m)
     var j = 0
     while (j < m) {
@@ -383,9 +394,7 @@ case class PqEncodeTop(child: Expression, cb: Pq.Codebooks, n: Int)
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     val Pq.Codebooks(_, ksub, dsub, flat) = cb
-    if (v.numElements() != dsub) return null
-    var e = 0
-    while (e < dsub) { if (v.isNullAt(e)) return null; e += 1 }
+    if (v.numElements() != dsub || Pq.hasNullElement(v)) return null
     val dist = new Array[Double](ksub)
     var t = 0
     while (t < ksub) {
@@ -413,7 +422,8 @@ case class PqEncodeTop(child: Expression, cb: Pq.Codebooks, n: Int)
     copy(child = newChild)
 }
 
-/** codes → reconstructed vector (concatenated centroids). */
+/** codes → reconstructed vector (concatenated centroids). A wrong-length
+  * code list, an out-of-range code or a null code → null. */
 case class PqDecode(child: Expression, cb: Pq.Codebooks)
     extends UnaryExpression with UnaryKernelCodegen {
 
@@ -430,7 +440,7 @@ case class PqDecode(child: Expression, cb: Pq.Codebooks)
   override def nullSafeEval(input: Any): Any = {
     val codes = input.asInstanceOf[ArrayData]
     val Pq.Codebooks(m, ksub, dsub, flat) = cb
-    if (codes.numElements() != m) return null
+    if (codes.numElements() != m || Pq.hasNullElement(codes)) return null
     val out = new Array[Float](m * dsub)
     var j = 0
     while (j < m) {
@@ -449,7 +459,8 @@ case class PqDecode(child: Expression, cb: Pq.Codebooks)
 
 /** query vector → flattened m×ksub table: entry (j, t) is the squared
   * distance of query subvector j to centroid t. Computed once per query
-  * row; every corpus candidate afterwards costs m lookups. */
+  * row; every corpus candidate afterwards costs m lookups. Null /
+  * wrong-dimension vectors, and vectors with a null element, → null. */
 case class PqAdcTable(child: Expression, cb: Pq.Codebooks)
     extends UnaryExpression with UnaryKernelCodegen {
 
@@ -466,7 +477,7 @@ case class PqAdcTable(child: Expression, cb: Pq.Codebooks)
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
     val Pq.Codebooks(m, ksub, dsub, flat) = cb
-    if (v.numElements() != m * dsub) return null
+    if (v.numElements() != m * dsub || Pq.hasNullElement(v)) return null
     val out = new Array[Double](m * ksub)
     var j = 0
     while (j < m) {

@@ -108,7 +108,7 @@ object CheckQueries {
       Runner.verdictDF(t(s, dir, "orders"), Seq(
         StringRegexCheck("o_orderpriority", "^[1-3]-", Some("0.3"), "regex")))),
 
-    // columnMaxCheck driver-side verdicts for a numeric and a string column (reference check #7).
+    // columnMaxCheck in-plan verdicts for a numeric and a string column (reference check #7).
     "chk_colmax" -> ((s, dir) =>
       Runner.verdictDF(t(s, dir, "lineitem"), Seq(
         ColumnMaxCheck("l_quantity", Bound.Num(50), "qmax"),

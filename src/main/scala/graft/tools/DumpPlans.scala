@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for named `SparkEntry.queries` entries
   * to `<outDir>/<name>.txt` — the optimization-round plan artifacts
-  * (`plans/rNN/<query>_before.txt` / `_after.txt`). Reuses the Bench
-  * session shape (same master/shuffle-partitions contract) so the
-  * captured plans are the ones the bench actually runs.
+  * (`plans/rNN/<query>_before.txt` / `_after.txt`). Opens the Bench
+  * session ([[graft.SparkEntry.localSession]]) so the captured plans are
+  * the ones the bench actually runs.
   *
   * Usage: runMain graft.tools.DumpPlans <sfDir> <outDir> [suffix] [names...]
   * With no names, dumps every query (slow — builds each frame).
@@ -20,14 +18,7 @@ object DumpPlans {
     val suffix = if (args.length >= 3) args(2) else ""
     val names = args.drop(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(cpus)
     try graft.queries.CheckQueries.materializeFixtures(spark, sfDir)
     catch { case _: Throwable => () }
     val selected =

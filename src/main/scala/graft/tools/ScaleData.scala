@@ -40,15 +40,7 @@ object ScaleData {
     val reps = if (args.length > 2) args(2).toInt else 10
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).toSet else Set.empty
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     try generate(spark, src, dst, reps, only) finally spark.stop()
   }
 

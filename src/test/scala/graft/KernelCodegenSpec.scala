@@ -166,6 +166,26 @@ class KernelCodegenSpec extends SparkSuite {
     assert(!got(1).isNullAt(0))
   }
 
+  test("pq_encode / pq_adc_table / pq_decode: a NULL element or NULL code gives NULL") {
+    val cb = Pq.Codebooks(2, 4, 2, Array.tabulate(2 * 4 * 2)(i => (i % 5).toFloat - 2f))
+    val vecs = Seq(
+      (1L, Seq(Some(0.5), None, Some(1.0), Some(0.0))),
+      (2L, Seq(Some(0.5), Some(0.0), Some(1.0), Some(0.0)))
+    ).toDF("id", "v")
+    val codes = Seq((1L, Seq(Some(1), None)), (2L, Seq(Some(1), Some(2)))).toDF("id", "c")
+    def encoded = vecs.orderBy("id")
+      .select(Pq.encode(col("v"), cb).as("codes"), Pq.adcTable(col("v"), cb).as("tab"))
+    def decoded = codes.orderBy("id").select(Pq.decode(col("c"), cb).as("rec"))
+    assertParity("pq-null-element")(encoded)
+    assertParity("pq-decode-null-code")(decoded)
+    val (e, d) = (encoded.collect(), decoded.collect())
+    assert(e(0).isNullAt(0), s"NULL element encoded as a value: ${e(0)}")
+    assert(e(0).isNullAt(1), s"NULL element scored as a value: ${e(0)}")
+    assert(!e(1).isNullAt(0) && !e(1).isNullAt(1))
+    assert(d(0).isNullAt(0), s"NULL code decoded as centroid 0: ${d(0)}")
+    assert(!d(1).isNullAt(0))
+  }
+
   test("bridged kernels fuse into whole-stage codegen stages") {
     // The point of the bridge: a CodegenFallback expression excluded its
     // WHOLE operator from WholeStageCodegen (CollapseCodegenStages
