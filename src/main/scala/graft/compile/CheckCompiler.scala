@@ -130,6 +130,19 @@ object CheckCompiler {
     // string bounds (ISO literals), via Catalyst's string→temporal coercion
     def isTemporal(dt: DataType) =
       dt == DateType || dt == TimestampType || dt == TimestampNTZType
+    // a string bound on a temporal column must parse the way the scan's
+    // string→date/timestamp cast parses it, or the run throws
+    // CAST_INVALID_INPUT partway through the scan
+    def unparseable(s: String, dt: DataType): Boolean = {
+      import org.apache.spark.sql.catalyst.util.DateTimeUtils
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(s)
+      dt match {
+        case DateType => DateTimeUtils.stringToDate(u).isEmpty
+        case TimestampType => DateTimeUtils.stringToTimestamp(u, java.time.ZoneOffset.UTC).isEmpty
+        case TimestampNTZType => DateTimeUtils.stringToTimestampWithoutTimeZone(u).isEmpty
+        case _ => false
+      }
+    }
 
     check match {
       case NullCheck(c, t, _) => field(c).swap.toSeq ++ badThreshold(t)
@@ -155,6 +168,8 @@ object CheckCompiler {
               s"numeric range bound on non-numeric column '$c' (${f.dataType.simpleString})"
             case Bound.Str(_) if f.dataType != StringType && !isTemporal(f.dataType) =>
               s"string range bound on non-string/temporal column '$c' (${f.dataType.simpleString})"
+            case Bound.Str(s) if unparseable(s, f.dataType) =>
+              s"range bound '$s' is not a valid ${f.dataType.simpleString} for column '$c'"
             case Bound.Ref(rc) if schema.fields.exists(rf => rf.name == rc &&
                 isNumeric(rf.dataType) != isNumeric(f.dataType)) =>
               s"range bound column '$rc' type incompatible with '$c'"
@@ -186,6 +201,8 @@ object CheckCompiler {
               Seq(s"numeric columnMaxCheck on non-numeric column '$c' (${f.dataType.simpleString})")
             case Bound.Str(_) if f.dataType != StringType && !isTemporal(f.dataType) =>
               Seq(s"string columnMaxCheck on non-string/temporal column '$c' (${f.dataType.simpleString})")
+            case Bound.Str(s) if unparseable(s, f.dataType) =>
+              Seq(s"columnMaxCheck value '$s' is not a valid ${f.dataType.simpleString} for column '$c'")
             case _ => Nil
           }
         }

@@ -285,7 +285,7 @@ object Runner {
        round(lit(mean), 6).as("mean") +:
        lit(mn).as("mn") +:
        lit(mx).as("mx") +:
-       round(sqrt(col("cs_ssq") / lit(math.max(cnt - 1L, 1L))), 6).as("stddev") +:
+       (if (cnt > 1) round(sqrt(col("cs_ssq") / lit(cnt - 1)), 6) else lit(0.0)).as("stddev") +:
        (0 until NumBins).map(i => col(s"cs_b$i").as(s"b$i"))): _*)
   }
 

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for corpus-scale pipelines, in increasing
@@ -12,6 +12,12 @@ import org.apache.spark.sql.functions._
   * bounded candidate verification. Nothing materializes O(n²) pairs:
   * candidate generation is always key-equality (shuffle-join-able), and
   * verification only touches colliding pairs.
+  *
+  * Every pair operator returns a plan that Spark recomputes from lineage
+  * (so executor loss is recovered like any other lost partition); an
+  * intermediate read by several consumers is shared through
+  * [[GraftColumn.pinned]] placed after a key exchange, never through a
+  * cache entry or a checkpoint.
   */
 object Dedup {
 
@@ -94,30 +100,8 @@ object Dedup {
   def sigAgreementPct(sigA: Column, sigB: Column, numHashes: Int): Column =
     GraftFunctions.minhashAgree(sigA, sigB) * 100L / numHashes
 
-  /** Materialize-then-release cache protocol shared by the dedup APIs:
-    * the big featurization DataFrame is persisted only for the duration
-    * of ONE job that computes the (small) pair result, then unpersisted —
-    * a long-lived session accumulates no cache blocks per call. The pair
-    * result is captured with an eager `localCheckpoint` (pairs are tiny
-    * relative to the corpus; its blocks are reaped by the ContextCleaner
-    * once the caller drops the DataFrame, unlike `persist`, which pins
-    * blocks until an explicit unpersist). Callers that would rather keep
-    * full lineage (e.g. long fault-tolerant cluster jobs where a lost
-    * executor must recompute) pass `materialize = false` and own the
-    * featurization cache: result consumption keeps using the cache, and
-    * the caller clears it (`spark.catalog.clearCache()` or unpersist via
-    * the plan) when done. */
-  private[functions] def materializeAndRelease(result: DataFrame,
-      materialize: Boolean, caches: DataFrame*): DataFrame =
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true) // one job, caches live during it
-      caches.foreach(_.unpersist(blocking = false))
-      out
-    }
-
   /** MinHash featurization — (`idCol`, `sh` sorted hashed shingle set,
-    * `sig` minhash signature). This is the persistable dedup INDEX
+    * `sig` minhash signature). This is the storable dedup INDEX
     * representation: write it to parquet once per corpus snapshot, read
     * it back for every incremental batch ([[minhashNearDupAgainst]]) —
     * the standing corpus is never re-shingled. */
@@ -152,32 +136,31 @@ object Dedup {
     * index-bands rather than a self-join: per-batch cost scales with the
     * BATCH size and the collision volume, not the corpus. The index side
     * is scanned once per stage (bands / sigs / shingles); callers running
-    * many batches against one index should persist it.
+    * many batches against one index should cache it.
     *
     * To then drop the matched batch docs:
     * {{{ batch.join(matches.select(idCol).distinct(), Seq(idCol), "left_anti") }}} */
   def minhashNearDupAgainst(batch: DataFrame, index: DataFrame,
       idCol: String, textCol: String, shingleK: Int = 5, numHashes: Int = 64,
-      bands: Int = 16, tauPct: Int = 51, materialize: Boolean = true): DataFrame = {
+      bands: Int = 16, tauPct: Int = 51): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands)")
     val rowsPerBand = numHashes / bands
     // Exact replicas in the arriving batch are collapsed before the
     // cascade (same design as [[minhashNearDupPairs]], including the
-    // narrow-projection protocol — text is never grouped or cached):
+    // narrow-projection protocol — text is never grouped or pinned):
     // identical texts share every feature, so band/screen/verify runs
     // once per unique batch text and matches fan back out to member ids
     // at the end. Batch-vs-index only — within-batch pairs are out of
     // contract here.
     val hashed = batch
       .select(col(idCol).as("__mid"), xxhash64(col(textCol)).as("__ch"))
-    val slim = hashed.groupBy("__ch").agg(min(col("__mid")).as("__rid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val slim = GraftColumn.pinned(hashed.groupBy("__ch").agg(min(col("__mid")).as("__rid")))
     val memb = hashed.join(slim.select(col("__ch"), col("__rid")), "__ch")
     val repDocs = batch.select(col(idCol).as("__rid"), col(textCol).as("__text"))
       .join(slim.select(col("__rid")), Seq("__rid"), "left_semi")
-    val bf = minhashFeaturize(repDocs, "__rid", "__text", shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bf = GraftColumn.pinned(minhashFeaturize(repDocs, "__rid", "__text", shingleK, numHashes)
+      .repartition(col("__rid")))
     val cands = lshBands(bf, "__rid", "sig", bands, rowsPerBand)
       .toDF("__rid", "band", "band_hash")
       .join(lshBands(index, idCol, "sig", bands, rowsPerBand)
@@ -199,10 +182,9 @@ object Dedup {
       .where(col("inter") * 100 >= col("uni") * tauPct)
       .select(col("__rid"), col("corpus_id"),
         round(col("inter").cast("double") / col("uni").cast("double"), 6).as("jaccard"))
-    val result = repMatches
+    repMatches
       .join(memb.select(col("__rid"), col("__mid")), "__rid")
       .select(col("__mid").as(idCol), col("corpus_id"), col("jaccard"))
-    materializeAndRelease(result, materialize, bf, slim)
   }
 
   /** End-to-end MinHash-LSH near-dup pairs verified by exact Jaccard at
@@ -224,20 +206,18 @@ object Dedup {
     * texts (null → null features, empty → 0/0 jaccard) keep byte-for-
     * byte the semantics of the uncollapsed pipeline.
     *
-    * The unique-text featurization (id, shingles, signature) is persisted
-    * ONCE and shared by all downstream uses (both sides of the band
-    * self-join, both sides of the verification join, the self-pair
-    * qualifier) — without the cache barrier, Spark would recompute
-    * shingling + signatures per join side. The collapse itself rides the
-    * NARROW (id, content-hash) projection: grouping, counting and the
-    * member map shuffle 16-byte rows, text reaches only the one
-    * rep-recovery semi-join feeding the featurization scan, and nothing
-    * cached ever holds a text column. At corpus scale this is the
-    * standard shape: compact-key shuffles plus one materialized
-    * featurization pass. Cache lifecycle per [[materializeAndRelease]]. */
+    * The unique-text featurization (id, shingles, signature) is computed
+    * ONCE, pinned after its exchange on the representative id, and shared
+    * by all downstream uses (both sides of the band self-join, both sides
+    * of the verification join, the self-pair qualifier) — unshared, Spark
+    * would recompute shingling + signatures per join side. The collapse
+    * itself rides the NARROW (id, content-hash) projection: grouping,
+    * counting and the member map shuffle 16-byte rows, text reaches only
+    * the one rep-recovery semi-join feeding the featurization scan, and
+    * nothing shared ever holds a text column. */
   def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 5, numHashes: Int = 64, bands: Int = 16,
-      tauPct: Int = 51, materialize: Boolean = true): DataFrame = {
+      tauPct: Int = 51): DataFrame = {
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be divisible by bands ($bands) — " +
         "a remainder would silently drop signature components from banding")
@@ -253,21 +233,20 @@ object Dedup {
     // replica collapse over the narrow (id, content-hash) projection:
     // one group row per unique text (min id = representative), member
     // map by hash join, and the representatives' text recovered with a
-    // semi-join on the min id — text never enters a groupBy or a cache
+    // semi-join on the min id — text never enters a groupBy or a pin
     val hashed = docs
       .select(col(idCol).as("__mid"), xxhash64(col(textCol)).as("__ch"))
-    val slim = hashed.groupBy("__ch")
-      .agg(min(col("__mid")).as("__rid"), count(lit(1L)).as("__n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // id → representative map, for the pair expansion
-    val memb = hashed.join(slim.select(col("__ch"), col("__rid")), "__ch")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val slim = GraftColumn.pinned(hashed.groupBy("__ch")
+      .agg(min(col("__mid")).as("__rid"), count(lit(1L)).as("__n")))
+    // id → representative map, for the pair expansion (read four times)
+    val memb = GraftColumn.pinned(hashed.join(slim.select(col("__ch"), col("__rid")), "__ch")
+      .repartition(col("__rid")))
     val repDocs = docs.select(col(idCol).as("__rid"), col(textCol).as("__text"))
       .join(slim.select(col("__rid")), Seq("__rid"), "left_semi")
     // featurize once per unique text with the fused kernel: sorted hashed
     // shingle set (also the verification representation) + its signature
-    val featurized = minhashFeaturize(repDocs, "__rid", "__text", shingleK, numHashes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val featurized = GraftColumn.pinned(
+      minhashFeaturize(repDocs, "__rid", "__text", shingleK, numHashes).repartition(col("__rid")))
     val cands = lshCandidates(featurized, "__rid", "sig", bands, numHashes / bands)
     val sigs = featurized.select(col("__rid"), col("sig"))
     val screened = cands
@@ -313,8 +292,7 @@ object Dedup {
       .join(memb.select(col("__rid"), col("__mid").as("__mb")), "__rid")
       .where(col("__ma") < col("__mb"))
       .select(col("__ma").as("id_a"), col("__mb").as("id_b"), col("jaccard"))
-    val result = cross.unionByName(within)
-    materializeAndRelease(result, materialize, featurized, memb, slim)
+    cross.unionByName(within)
   }
 
   /** EXACT Jaccard near-dup self-join at tauPct/100 via AllPairs prefix
@@ -331,22 +309,22 @@ object Dedup {
     * rarest-first rank (window over doc id — many small groups, no skew) →
     * prefix index → self-join on shingle + size-ratio prefilter → distinct
     * pairs → exact intersect verify. Every stage is a key-partitioned
-    * shuffle; candidate volume scales with real similarity, not n².
-    * Cache lifecycle per [[materializeAndRelease]]. */
+    * shuffle; candidate volume scales with real similarity, not n². The
+    * featurization is pinned after its exchange on the doc id and shared
+    * by the token explode and both verify joins: re-evaluated per
+    * consumer, it cost dedup_jaccard about a third more (sf0.1, local[4]). */
   def jaccardNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 5, tauPct: Int = 51, materialize: Boolean = true,
-      keepCounts: Boolean = false): DataFrame = {
+      shingleK: Int = 5, tauPct: Int = 51, keepCounts: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Work on SORTED HASHED shingles throughout (one fused kernel):
     // 8-byte longs instead of UTF8Strings shrink every shuffle and let
     // verification run as a linear merge. Hashing a deduplicated gram set
     // preserves set cardinalities (64-bit collisions are negligible at
     // any corpus size).
-    val sh = docs
+    val sh = GraftColumn.pinned(docs
       .select(col(idCol).as("id"),
         GraftFunctions.charShingleHashes(col(textCol), shingleK).as("sh"))
-      .withColumn("sz", size(col("sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("sz", size(col("sh"))).repartition(col("id")))
     val tokens = sh.select(col("id"), col("sz"), explode(col("sh")).as("g"))
     val dfreq = tokens.groupBy("g").agg(count(lit(1L)).as("df"))
     // minimum overlap ⌈τ·sz⌉ in pure integer arithmetic (no float edge):
@@ -361,7 +339,7 @@ object Dedup {
       .where(col("id_a") < col("id_b") &&
         sizeCompatible(col("sz_a"), col("sz_b"), tauPct))
       .select("id_a", "id_b").distinct()
-    val result = cands
+    cands
       .join(sh.toDF("jid_a", "sh_a", "sz_a"), col("id_a") === col("jid_a"))
       .join(sh.toDF("jid_b", "sh_b", "sz_b"), col("id_b") === col("jid_b"))
       .withColumn("inter", GraftFunctions.sortedIntersectCount(col("sh_a"), col("sh_b")))
@@ -373,7 +351,6 @@ object Dedup {
         // sweeping SEVERAL thresholds can re-test `inter*100 >= uni*τ`
         // verbatim on this pair table instead of re-featurizing per τ
         (if (keepCounts) Seq(col("inter"), col("uni")) else Seq.empty): _*)
-    materializeAndRelease(result, materialize, sh)
   }
 
   /** ASYMMETRIC containment pairs: (inner_id, outer_id, containment)
@@ -394,16 +371,17 @@ object Dedup {
     * equi-join driven by shared-rare-gram structure, never a cartesian.
     * Verification is one linear merge over sorted hashed gram sets.
     * Docs with zero grams (shorter than the shingle) pair with nothing:
-    * a 0-gram inner would vacuously "be contained" everywhere. */
+    * a 0-gram inner would vacuously "be contained" everywhere. The
+    * featurization is shared as in [[jaccardNearDupPairs]]. */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 8, tauPct: Int = 90, materialize: Boolean = true): DataFrame = {
+      shingleK: Int = 8, tauPct: Int = 90): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sh = docs
+    val sh = GraftColumn.pinned(docs
       .select(col(idCol).as("id"),
         GraftFunctions.charShingleHashes(col(textCol), shingleK).as("sh"))
       .withColumn("sz", size(col("sh")))
       .where(col("sz") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("id")))
     val tokens = sh.select(col("id"), col("sz"), explode(col("sh")).as("g"))
     val dfreq = tokens.groupBy("g").agg(count(lit(1L)).as("df"))
     val minOverlap = floor((col("sz") * tauPct + lit(99)) / 100)
@@ -418,7 +396,7 @@ object Dedup {
       .where(col("inner_id") =!= col("outer_id") &&
         col("sz_o") * 100 >= col("sz_i") * tauPct)
       .select("inner_id", "outer_id").distinct()
-    val result = cands
+    cands
       .join(sh.toDF("jid_i", "sh_i", "sz_i"), col("inner_id") === col("jid_i"))
       .join(sh.toDF("jid_o", "sh_o", "sz_o"), col("outer_id") === col("jid_o"))
       .withColumn("inter", GraftFunctions.sortedIntersectCount(col("sh_i"), col("sh_o")))
@@ -426,7 +404,6 @@ object Dedup {
       .select(col("inner_id"), col("outer_id"),
         round(col("inter").cast("double") / col("sz_i").cast("double"), 6)
           .as("containment"))
-    materializeAndRelease(result, materialize, sh)
   }
 
   /** Aggressive content normalization for NEAR-exact dedup (the CCNet /
@@ -483,20 +460,7 @@ object Dedup {
     * [[Similarity.annSelfJoin]]. */
   def hammingNearDupPairs(docs: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int, nChunks: Int = 0): DataFrame = {
-    val n = if (nChunks > 0) nChunks else maxHamming + 1
-    require(n >= 1 && n <= 64, s"nChunks must be in [1, 64], got $n")
-    require(maxHamming >= 0 && maxHamming <= 64, s"bad maxHamming $maxHamming")
-    // chunk i covers [off, off+width): widths differ by at most one bit
-    // so the pigeonhole guarantee holds for any nChunks
-    val base = 64 / n; val rem = 64 % n
-    val chunks = array((0 until n).map { i =>
-      val off = i * base + math.min(i, rem)
-      val width = base + (if (i < rem) 1 else 0)
-      val mask = if (width == 64) -1L else (1L << width) - 1
-      shiftright(col(hashCol), off).bitwiseAND(lit(mask))
-    }: _*)
-    val chunked = docs.select(col(idCol), col(hashCol), posexplode(chunks))
-      .toDF(idCol, hashCol, "chunk_idx", "chunk")
+    val chunked = hammingChunks(docs, idCol, hashCol, maxHamming, nChunks)
     val a = chunked.toDF("id_a", "sim_a", "chunk_idx", "chunk")
     val b = chunked.toDF("id_b", "sim_b", "chunk_idx", "chunk")
     a.join(b, Seq("chunk_idx", "chunk"))
@@ -510,7 +474,7 @@ object Dedup {
   /** Incremental Hamming matching: batch fingerprints vs a standing
     * INDEX of fingerprints (pHash images, Haitsma–Kalker audio) — the
     * perceptual-hash sibling of [[minhashNearDupAgainst]]: per-batch
-    * cost scales with the batch; the index is a persistable (id, hash)
+    * cost scales with the batch; the index is a storable (id, hash)
     * parquet artifact that never recomputes. Same generalized chunk
     * banding as [[hammingNearDupPairs]] (pigeonhole-exact recall to
     * radius nChunks−1): candidates come from a chunk equi-join between
@@ -518,28 +482,34 @@ object Dedup {
     * verify. Returns (batch idCol, `index_id`, `hamming`). */
   def hammingNearDupAgainst(batch: DataFrame, index: DataFrame,
       idCol: String, hashCol: String, maxHamming: Int,
-      nChunks: Int = 0): DataFrame = {
-    val n = if (nChunks > 0) nChunks else maxHamming + 1
-    require(n >= 1 && n <= 64, s"nChunks must be in [1, 64], got $n")
-    require(maxHamming >= 0 && maxHamming <= 64, s"bad maxHamming $maxHamming")
-    val base = 64 / n; val rem = 64 % n
-    def chunked(df: DataFrame): DataFrame = {
-      val chunks = array((0 until n).map { i =>
-        val off = i * base + math.min(i, rem)
-        val width = base + (if (i < rem) 1 else 0)
-        val mask = if (width == 64) -1L else (1L << width) - 1
-        shiftright(col(hashCol), off).bitwiseAND(lit(mask))
-      }: _*)
-      df.select(col(idCol), col(hashCol), posexplode(chunks))
-        .toDF(idCol, hashCol, "chunk_idx", "chunk")
-    }
-    chunked(batch).toDF("__bid", "__bh", "chunk_idx", "chunk")
-      .join(chunked(index).toDF("index_id", "__ih", "chunk_idx", "chunk"),
-        Seq("chunk_idx", "chunk"))
+      nChunks: Int = 0): DataFrame =
+    hammingChunks(batch, idCol, hashCol, maxHamming, nChunks)
+      .toDF("__bid", "__bh", "chunk_idx", "chunk")
+      .join(hammingChunks(index, idCol, hashCol, maxHamming, nChunks)
+        .toDF("index_id", "__ih", "chunk_idx", "chunk"), Seq("chunk_idx", "chunk"))
       .select(col("__bid").as(idCol), col("index_id"),
         bit_count(col("__bh").bitwiseXOR(col("__ih"))).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
+
+  /** One row per (`idCol`, `hashCol`, chunk_idx, chunk): the 64-bit
+    * fingerprint banded into `nChunks` contiguous chunks (default
+    * maxHamming + 1). Chunk i covers [off, off+width); widths differ by
+    * at most one bit, so the pigeonhole guarantee holds for any count. */
+  private def hammingChunks(df: DataFrame, idCol: String, hashCol: String,
+      maxHamming: Int, nChunks: Int): DataFrame = {
+    val n = if (nChunks > 0) nChunks else maxHamming + 1
+    require(n >= 1 && n <= 64, s"nChunks must be in [1, 64], got $n")
+    require(maxHamming >= 0 && maxHamming <= 64, s"bad maxHamming $maxHamming")
+    val base = 64 / n; val rem = 64 % n
+    val chunks = array((0 until n).map { i =>
+      val off = i * base + math.min(i, rem)
+      val width = base + (if (i < rem) 1 else 0)
+      val mask = if (width == 64) -1L else (1L << width) - 1
+      shiftright(col(hashCol), off).bitwiseAND(lit(mask))
+    }: _*)
+    df.select(col(idCol), col(hashCol), posexplode(chunks))
+      .toDF(idCol, hashCol, "chunk_idx", "chunk")
   }
 
   /** All pairs within Levenshtein edit distance `maxDist` — fuzzy
@@ -618,14 +588,6 @@ object Dedup {
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
 
-  /** One row per (id, string, deletion-neighborhood key): the string
-    * itself plus every string obtainable by deleting ≤ `maxDist`
-    * characters — the SymSpell candidate key set. Keys ship as 64-bit
-    * xxhash64 of the variant, not the variant string: the candidate
-    * join shuffles an 8-byte key instead of a near-full-length string
-    * per variant row, and a hash collision can only ADD a candidate
-    * pair, which the exact levenshtein verify then rejects — the same
-    * one-sided-error discipline as the banding operators. */
   /** Dataset-level overlap: EXACT pairwise Jaccard between the distinct
     * doc-content-digest sets of each corpus slice (which sources carry
     * the same documents? how redundant is a new crawl against the
@@ -729,6 +691,14 @@ object Dedup {
       .where(col("cos") >= minCos)
   }
 
+  /** One row per (id, string, deletion-neighborhood key): the string
+    * itself plus every string obtainable by deleting ≤ `maxDist`
+    * characters — the SymSpell candidate key set. Keys ship as 64-bit
+    * xxhash64 of the variant, not the variant string: the candidate
+    * join shuffles an 8-byte key instead of a near-full-length string
+    * per variant row, and a hash collision can only ADD a candidate
+    * pair, which the exact levenshtein verify then rejects — the same
+    * one-sided-error discipline as the banding operators. */
   private def deletionKeyed(docs: DataFrame, idCol: String, strCol: String,
       maxDist: Int): DataFrame = {
     require(maxDist >= 1 && maxDist <= 2,

@@ -55,22 +55,18 @@ object Ivf {
     * re-ranks), so recall degrades negligibly. Few Lloyd iterations
     * suffice for the same reason.
     *
-    * Cache protocol (same materialize-then-release shape as
-    * [[Dedup.minhashNearDupPairs]]): the (small) top-k result is
-    * captured eagerly by default; `materialize = false` keeps full
-    * lineage for fault-tolerant long jobs. Nothing else needs a cache —
-    * assignment is a single in-scan pass feeding one join. */
+    * The result is a plan Spark recomputes from lineage: assignment is a
+    * single in-scan pass feeding one join, so nothing needs sharing. */
   def ivfKnn(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
       nLists: Int = 16, nProbe: Int = 4, seed: Long = 42L,
       scoreDp: Int = 4, trainFraction: Double = 1.0,
-      maxTrainRows: Int = 1 << 16, materialize: Boolean = true): DataFrame = {
+      maxTrainRows: Int = 1 << 16): DataFrame = {
     require(trainFraction > 0.0 && trainFraction <= 1.0,
       s"trainFraction must be in (0, 1], got $trainFraction")
     require(nLists > 1, s"nLists must be > 1, got $nLists")
     require(nProbe >= 1 && nProbe <= nLists,
       s"nProbe must be in [1, nLists=$nLists], got $nProbe")
-    val spark = corpus.sparkSession
 
     val sampled = Pq.collectSample(corpus, vecCol, trainFraction, seed, maxTrainRows)
     // a 1-subspace PQ codebook IS a coarse quantizer: ksub centroids
@@ -100,8 +96,6 @@ object Ivf {
       .select(col(qidCol), col(idCol),
         round(GraftFunctions.cosineSim(col(vecCol), col(qvecCol)), scoreDp).as("cos"))
     val w = Window.partitionBy(col(qidCol)).orderBy(col("cos").desc, col(idCol))
-    val result = scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-    if (!materialize) result
-    else result.localCheckpoint(true) // result is small: k rows per query
+    scored.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
   }
 }

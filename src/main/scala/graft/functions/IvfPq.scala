@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * Search broadcasts per-(query, cell) ADC tables and joins them to the
   * index by LIST-ID EQUALITY: corpus codes never shuffle, and the only
   * exchange is the per-query top-k window over (qid, id, dist) triples.
-  * The index DataFrame (id, list, codes) is the persistable artifact —
+  * The index DataFrame (id, list, codes) is the stored artifact —
   * write it to parquet partitioned by list and incremental batches
   * append without touching existing cells.
   */
@@ -69,7 +69,7 @@ object IvfPq {
     Index(coarse, Pq.trainLocal(residuals, m, ksub, seed + 7919, maxIter))
   }
 
-  /** Encode the corpus as the persistable index: (`idCol`, `list` int,
+  /** Encode the corpus as the storable index: (`idCol`, `list` int,
     * `codes` array<int> of the residual's PQ codes) — all in-scan.
     *
     * Rows whose vector is null or has the wrong dimension are EXCLUDED
@@ -179,26 +179,17 @@ object IvfPq {
 
   /** Train + encode + search in one call (the test-scale convenience;
     * at corpus scale, train once, write [[encodeIndex]] to parquet, and
-    * [[search]] against the read-back index). Cache protocol as
-    * [[Dedup.minhashNearDupPairs]]: the encoded index is persisted for
-    * the duration of the search, then released after the (small) top-k
-    * is captured eagerly. */
+    * [[search]] against the read-back index). The result is a plan Spark
+    * recomputes from lineage: [[search]] reads the encoded index once,
+    * so nothing needs sharing. */
   def ivfPqKnn(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
       nLists: Int = 16, nProbe: Int = 4, m: Int = 8, ksub: Int = 16,
       seed: Long = 42L, trainFraction: Double = 1.0,
-      maxTrainRows: Int = 1 << 16, scoreDp: Int = 6,
-      materialize: Boolean = true): DataFrame = {
+      maxTrainRows: Int = 1 << 16, scoreDp: Int = 6): DataFrame = {
     val ix = train(corpus, vecCol, nLists, m, ksub, seed, trainFraction,
       maxTrainRows = maxTrainRows)
-    val index = encodeIndex(corpus, idCol, vecCol, ix)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val result = search(index, idCol, ix, queries, qidCol, qvecCol, k, nProbe, scoreDp)
-    if (!materialize) result
-    else {
-      val out = result.localCheckpoint(true) // k rows per query
-      index.unpersist(blocking = false)
-      out
-    }
+    search(encodeIndex(corpus, idCol, vecCol, ix), idCol, ix, queries, qidCol, qvecCol,
+      k, nProbe, scoreDp)
   }
 }

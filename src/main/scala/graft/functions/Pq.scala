@@ -502,7 +502,8 @@ case class PqAdcTable(child: Expression, cb: Pq.Codebooks)
     copy(child = newChild)
 }
 
-/** (codes, flattened table) → Σ_j table(j·ksub + codes(j)). */
+/** (codes, flattened table) → Σ_j table(j·ksub + codes(j)); NULL when a
+  * code or a table element is NULL. */
 case class PqAdcDist(left: Expression, right: Expression, ksub: Int)
     extends BinaryExpression with BinaryKernelCodegen {
 
@@ -521,7 +522,8 @@ case class PqAdcDist(left: Expression, right: Expression, ksub: Int)
     val codes = codesAny.asInstanceOf[ArrayData]
     val table = tableAny.asInstanceOf[ArrayData]
     val m = codes.numElements()
-    if (m * ksub != table.numElements()) return null
+    if (m * ksub != table.numElements() || Pq.hasNullElement(codes) ||
+        Pq.hasNullElement(table)) return null
     var d = 0.0
     var j = 0
     while (j < m) {

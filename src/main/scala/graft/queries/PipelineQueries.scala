@@ -1047,8 +1047,8 @@ object PipelineQueries {
       val quality = scored.where(col("q") >= 0.5)
       // The quality+window subtree feeds the pair featurization, the
       // cluster-drop anti-join AND the summary aggregates — persist it for
-      // the duration of this one call (materialize-and-release, same
-      // protocol as Dedup) instead of recomputing the window scan 3-4×.
+      // the duration of this one call (released once the one-row result
+      // is checkpointed) instead of recomputing the window scan 3-4×.
       // Keeping the rank column lets ONE pass produce both the quality
       // count and the exact-dedup count.
       val ranked = quality

@@ -348,6 +348,29 @@ class CheckEngineSpec extends SparkSuite {
     assert(e.getMessage.contains("columnMaxCheck expected cannot be a column ref"), e.getMessage)
   }
 
+  test("configCheck rejects an unparseable string bound on a DATE or TIMESTAMP column") {
+    val df = Seq(("a", "2024-01-15", "2024-01-15 08:00:00"))
+      .toDF("key", "d", "ts")
+      .select(col("key"), col("d").cast("date").as("d"), col("ts").cast("timestamp").as("ts"))
+    def check(c: CheckSpec) = Runner.configCheck(spark, TableSpec("t", _ => df, checks = Seq(c)))
+    val bad = Seq(
+      RangeCheck("d", Some(Bound.Str("not-a-date")), None, label = "r_d"),
+      RangeCheck("ts", None, Some(Bound.Str("2024-01-31 25:00:00")), label = "r_ts"),
+      ColumnMaxCheck("d", Bound.Str("2024-02-30"), "m_d"),
+      ColumnMaxCheck("ts", Bound.Str("yesterday"), "m_ts"))
+    for (c <- bad) assert(check(c).exists(_.contains("is not a valid")), s"$c: ${check(c)}")
+    // every ISO form the scan's cast accepts stays accepted, and runs
+    val good = Seq(
+      RangeCheck("d", Some(Bound.Str("2024-01-01")), Some(Bound.Str("2024-02-01 00:00:00")), label = "g_d"),
+      RangeCheck("ts", Some(Bound.Str("2024-01")), Some(Bound.Str("2024-01-31T10:00:00Z")), label = "g_ts"),
+      ColumnMaxCheck("d", Bound.Str("2024-01-15"), "g_md"),
+      ColumnMaxCheck("ts", Bound.Str("2024-01-15T08:00:00"), "g_mts"))
+    for (c <- good) {
+      assert(check(c).isEmpty, s"$c: ${check(c)}")
+      assert(!Runner.run(spark, TableSpec("t", _ => df, checks = Seq(c))).results.head.failed, c.toString)
+    }
+  }
+
   test("run agrees with verdictDF, uniqueDF and colStatsDF on an all-NULL column and an empty slice") {
     val df = Seq[(String, Int, Option[Double], String, String)](
       ("a", 1, None, "xx", "2024-01-31"), ("a", -2, None, "y", "2024-01-02"),
@@ -380,6 +403,11 @@ class CheckEngineSpec extends SparkSuite {
           val ref = Runner.colStatsDF(slice, c).head()
           assert(st.count == ref.getAs[Long]("cnt") && st.min == ref.getAs[Double]("mn") &&
             st.max == ref.getAs[Double]("mx"), s"$label: $st vs $ref")
+          // colStatsDF rounds to 6 dp; a NULL must not read as 0.0 here
+          for ((name, v) <- Seq("mean" -> st.mean, "stddev" -> st.stdDev)) {
+            val r = ref.getAs[java.lang.Double](name)
+            assert(r != null && math.abs(r - v) <= 5e-7, s"$label $name: $st vs $ref")
+          }
           assert(st.histogram == (0 until Runner.NumBins).map(i => ref.getAs[Long](s"b$i")), s"$label: $st vs $ref")
         case c => assert(run(c.label).failed == v.getAs[Boolean](s"${c.label}_failed"), c.label)
       }

@@ -186,6 +186,17 @@ class KernelCodegenSpec extends SparkSuite {
     assert(!d(1).isNullAt(0))
   }
 
+  test("pq_adc_dist: a NULL code or a NULL table element gives NULL") {
+    val full = Seq(0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 6.0, 7.0).map(Some(_))
+    val holed = full.updated(2, None) // a slot that codes (1, 0) never read
+    val rows = Seq((1L, Seq(Some(1), None), full), (2L, Seq(Some(1), Some(0)), full),
+      (3L, Seq(Some(1), Some(0)), holed)).toDF("id", "c", "t")
+    val (gen, interp) = withModes(rows.orderBy("id").select(Pq.adcDist(col("c"), col("t"), 4)))
+    // codes (1, 0) over the full table: t(1) + t(4) = 5.0
+    for ((mode, got) <- Seq("codegen" -> gen, "interpreted" -> interp))
+      assert(got == Seq("[null]", "[5.0]", "[null]"), s"$mode: $got")
+  }
+
   test("bridged kernels fuse into whole-stage codegen stages") {
     // The point of the bridge: a CodegenFallback expression excluded its
     // WHOLE operator from WholeStageCodegen (CollapseCodegenStages

@@ -62,49 +62,40 @@ class PlanSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     assert(p.contains("WindowGroupLimit"), s"expected WindowGroupLimit:\n$p")
   }
 
-  // The dedup APIs materialize eagerly by default (cache released before
-  // returning), so plan-shape assertions inspect the materialize=false
-  // variant — the identical computation plan, left lazy.
   private def docs = graft.sources.Sources.table(spark, sf0001, "documents")
 
   test("dedup_jaccard has no cartesian product or nested-loop join") {
     val df = graft.functions.Dedup.jaccardNearDupPairs(
       docs.where(org.apache.spark.sql.functions.col("doc_id") < 1000),
-      "doc_id", "text", shingleK = 5, tauPct = 51, materialize = false)
+      "doc_id", "text", shingleK = 5, tauPct = 51)
     val p = plan(df)
-    spark.catalog.clearCache() // this variant leaves the cache to the caller
     assert(!p.contains("CartesianProduct"), s"cartesian reintroduced:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin"), s"nested-loop join reintroduced:\n$p")
   }
 
   test("dedup_minhash joins by key equality with the signature screen in place") {
     val df = graft.functions.Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      shingleK = 5, numHashes = 64, bands = 16, tauPct = 51, materialize = false)
+      shingleK = 5, numHashes = 64, bands = 16, tauPct = 51)
     val p = plan(df)
-    spark.catalog.clearCache() // this variant leaves the cache to the caller
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"pair enumeration degraded to all-pairs:\n$p")
     assert(p.contains("minhash_agree"), s"candidate screen missing from the plan:\n$p")
-    assert(p.contains("InMemoryTableScan"), s"featurization not shared via cache:\n$p")
+    // the featurization is computed once, inside the pinned leaf; unshared,
+    // every consumer (band self-join sides, screen and verify joins, the
+    // self-pair qualifier) would re-evaluate minhash_sig
+    assert("minhash_sig".r.findAllIn(p).isEmpty,
+      s"featurization evaluated per consumer instead of shared:\n$p")
   }
 
-  test("dedup_minhash default path releases its featurization cache") {
-    spark.catalog.clearCache()
-    val lazyCount = graft.functions.Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      materialize = false).count()
-    spark.catalog.clearCache()
-    // storage is session-global: earlier tests may have left checkpointed
-    // RDDs pinned, so assert RELATIVE growth, not an absolute count
-    val baseline = spark.sparkContext.getRDDStorageInfo.length
-    val eager = graft.functions.Dedup.minhashNearDupPairs(docs, "doc_id", "text")
-    assert(eager.count() == lazyCount, "materialized path changed the result")
-    // featurization blocks are unpersisted (async): beyond the baseline,
-    // only the checkpointed pair result may remain in storage
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    def stored = spark.sparkContext.getRDDStorageInfo.length
-    while (stored > baseline + 1 && System.nanoTime() < deadline) Thread.sleep(100)
-    assert(stored <= baseline + 1, s"featurization cache still pinned: ${
-      spark.sparkContext.getRDDStorageInfo.map(_.name).mkString(", ")}")
+  test("dedup_minhash leaves no block in storage") {
+    // storage is session-global, and earlier tests' blocks come and go as
+    // the cleaner reaps them: assert that no NEW RDD holds blocks
+    def stored = spark.sparkContext.getRDDStorageInfo.map(r => r.id -> r.name).toMap
+    val before = stored.keySet
+    val n = graft.functions.Dedup.minhashNearDupPairs(docs, "doc_id", "text").count()
+    assert(n > 0)
+    val added = stored -- before
+    assert(added.isEmpty, s"the operator left blocks in storage: $added")
   }
 
   test("annSelfJoin candidates come from (table,bucket) equi-joins — never all-pairs") {
@@ -539,7 +530,7 @@ class PlanSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
       s"bloom overlap must stay in the scan:\n$ov")
     // containment candidates ride equi-joins only — never a cartesian
     val cp = plan(graft.functions.Dedup.containmentPairs(
-      docs.limit(50), "doc_id", "text", materialize = false))
+      docs.limit(50), "doc_id", "text"))
     assert(!cp.contains("Cartesian") && !cp.contains("BroadcastNestedLoop"),
       s"containment must not go quadratic:\n$cp")
     // canonicalizeUrl / registrableDomain / charEntropy: scan-only
