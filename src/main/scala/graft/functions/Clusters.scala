@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -75,7 +75,14 @@ object Clusters {
     require(localEdgeLimit < Int.MaxValue,
       s"localEdgeLimit must be below Int.MaxValue (a driver collect that " +
         s"size cannot succeed); got $localEdgeLimit — use 0 to disable the gate")
-    val e0 = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
+    // The pair operators return lazy plans, and the probe plus both sides
+    // of the edge union read the pairs up to three times: pinning runs
+    // the pair plan's shuffles once, so each read recomputes only its
+    // last stage. Unpinned, dropNearDupMembers with localEdgeLimit = 0
+    // over minhashNearDupPairs took 40% longer than over checkpointed
+    // pairs (sf0.1 documents < 1000, local[4]).
+    val e0 = GraftColumn.pinned(
+      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
     if (localEdgeLimit > 0) {
       // one incremental job decides the gate AND feeds the local path:
       // take() collects partition batches until it has limit+1 rows (or

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * candidate generation is always key-equality (shuffle-join-able), and
   * verification only touches colliding pairs.
   *
-  * Every pair operator returns a plan that Spark recomputes from lineage
-  * (so executor loss is recovered like any other lost partition); an
-  * intermediate read by several consumers is shared through
-  * [[GraftColumn.pinned]] placed after a key exchange, never through a
-  * cache entry or a checkpoint.
+  * No pair operator caches or checkpoints: its result is a plan that
+  * Spark recomputes from lineage, so executor loss is recovered like any
+  * other lost partition. An intermediate read by several consumers is
+  * shared through [[GraftColumn.pinned]] placed after a key exchange.
+  * Pinning runs that exchange's map stages when the operator is called,
+  * so an operator with a pinned intermediate computes it eagerly; only
+  * the downstream pair stages run at the caller's action.
   */
 object Dedup {
 
@@ -309,10 +311,14 @@ object Dedup {
     * rarest-first rank (window over doc id — many small groups, no skew) →
     * prefix index → self-join on shingle + size-ratio prefilter → distinct
     * pairs → exact intersect verify. Every stage is a key-partitioned
-    * shuffle; candidate volume scales with real similarity, not n². The
-    * featurization is pinned after its exchange on the doc id and shared
-    * by the token explode and both verify joins: re-evaluated per
-    * consumer, it cost dedup_jaccard about a third more (sf0.1, local[4]). */
+    * shuffle; candidate volume scales with real similarity, not n².
+    *
+    * The featurization is pinned after its exchange on the doc id and
+    * shared by the token explode and both verify joins. Re-evaluated per
+    * consumer it was slower than the cached build this replaced in 10 of
+    * 10 alternating pairs of the dedup_jaccard registry query (median
+    * 7.63 s vs 6.45 s; pinned 6.35 s; sf0.1, local[4]) and in 8 of 10 of
+    * the perfbench curation pipeline (4.19 s vs 3.44 s; pinned 3.17 s). */
   def jaccardNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 5, tauPct: Int = 51, keepCounts: Boolean = false): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -371,8 +377,13 @@ object Dedup {
     * equi-join driven by shared-rare-gram structure, never a cartesian.
     * Verification is one linear merge over sorted hashed gram sets.
     * Docs with zero grams (shorter than the shingle) pair with nothing:
-    * a 0-gram inner would vacuously "be contained" everywhere. The
-    * featurization is shared as in [[jaccardNearDupPairs]]. */
+    * a 0-gram inner would vacuously "be contained" everywhere.
+    *
+    * The featurization is pinned after its exchange on the doc id and
+    * shared by the token explode and both verify joins. Re-evaluated per
+    * consumer it made the dedup_containment registry query slower in 9
+    * of 10 alternating pairs against the cached build this replaced
+    * (median 1.67 s vs 1.17 s; pinned 1.28 s; sf0.1, local[4]). */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 8, tauPct: Int = 90): DataFrame = {
     import org.apache.spark.sql.expressions.Window
