@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Near-dup pair → cluster resolution: the step between "found the
   * similar pairs" and "dropped the right documents". Every pair operator
@@ -20,12 +19,18 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale shape: every round is two hash-partitioned equi-joins and one
   * partial-aggregated min — all keyed on node id, nothing driver-side.
-  * Each round's result is `localCheckpoint`ed: iterative DataFrame loops
-  * otherwise stack lineage (and analysis cost) per round. The edge list
-  * is persisted once and reused by every round. State is O(|nodes in
-  * pairs|), NOT O(corpus): only documents that appear in some pair enter
-  * the graph — at 100 TB the pair graph is orders of magnitude smaller
-  * than the corpus.
+  * State is O(|nodes in pairs|), NOT O(corpus): only documents that
+  * appear in some pair enter the graph — at 100 TB the pair graph is
+  * orders of magnitude smaller than the corpus.
+  *
+  * Lineage: the result is one plan that Spark recomputes from lineage
+  * after losing an executor; the edge input, each round's self-joined
+  * intermediate and each batch's labels are shared through
+  * `GraftColumn.pinned` placed after their exchange, which also keeps
+  * a round's plan flat. Pinning runs those shuffle-map stages when the
+  * loop runs, and the result keeps every round's shuffle files
+  * referenced until it is dropped; the rounds are logarithmic in the
+  * component diameter.
   */
 object Clusters {
 
@@ -39,8 +44,8 @@ object Clusters {
     * SIZE GATE: a pair graph at or below `localEdgeLimit` edges (default
     * 2^20) is resolved by an in-driver union-find over the rows of ONE
     * incremental `take` — the same bounded-driver-artifact protocol as
-    * the PQ training sample — instead of the 6+ checkpointed join jobs
-    * the distributed loop costs at minimum. This is the common case by
+    * the PQ training sample — instead of the 6+ join jobs the
+    * distributed loop costs at minimum. This is the common case by
     * construction: dedup pair lists are output-sensitive and orders of
     * magnitude smaller than the corpus. Driver footprint at the default
     * limit: edge array + sorted node-id array + int parent array —
@@ -53,10 +58,10 @@ object Clusters {
     * could not succeed anyway). Both paths produce identical labels
     * (min reachable id).
     *
-    * Distributed round cost: one checkpointed job over the fused
-    * propagate+compress plan (the intra-round intermediate is persisted
-    * so its self-join computes it once) plus a trivial aggregate over
-    * the now-cached labels for the convergence check. The check exploits
+    * Distributed round cost: the shuffle stages of the fused
+    * propagate+compress plan (the intra-round intermediate is pinned so
+    * its self-join computes it once) plus a 1-row aggregate over the
+    * pinned labels for the convergence check. The check exploits
     * monotonicity instead of a join: labels only ever DECREASE, so any
     * change strictly lowers sum(lbl) — equal decimal sums across rounds
     * ⟺ converged. The first propagate round is fused into
@@ -66,8 +71,8 @@ object Clusters {
       maxIter: Int = 25, localEdgeLimit: Long = 1L << 20): DataFrame =
     connectedComponentsStats(pairs, aCol, bCol, maxIter, localEdgeLimit)._1
 
-  /** [[connectedComponents]] plus the number of materialized BATCHES the
-    * loop ran (two doubling rounds each; 0 = resolved by the in-driver
+  /** [[connectedComponents]] plus the number of BATCHES the loop ran
+    * (two doubling rounds each; 0 = resolved by the in-driver
     * union-find) — the scale bench logs it to prove logarithmic-round
     * convergence on stress graphs. */
   def connectedComponentsStats(pairs: DataFrame, aCol: String, bCol: String,
@@ -98,25 +103,24 @@ object Clusters {
     // would cost a full shuffle of the edge list per call
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
       .where(col("src") =!= col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // The heavy work per round is ONE checkpointed job; the convergence
-    // sum is then a direct aggregate over the freshly-checkpointed labels
-    // (cached blocks, one narrow pass — microseconds at any graph size
-    // next to the round's joins). The exact decimal sum is an
-    // overflow-safe monotone convergence witness. An earlier variant rode
-    // the sum on the checkpoint action itself as an Observation metric,
-    // but observation delivery is ASYNCHRONOUS on the listener bus — in a
-    // busy session each round could stall a full listener-timeout before
-    // falling back to this same aggregate, turning a 3-round resolve into
-    // tens of seconds. Determinism beats saving a trivial job.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val out = df.localCheckpoint(true)
+    // Pinning runs a batch's shuffle stages; the convergence sum is then
+    // a 1-row aggregate over the pinned labels (one narrow pass over the
+    // last stage — small next to the round's joins). The exact decimal
+    // sum is an overflow-safe monotone convergence witness. An earlier
+    // variant rode the sum on the materializing action itself as an
+    // Observation metric, but observation delivery is ASYNCHRONOUS on the
+    // listener bus — in a busy session each round could stall a full
+    // listener-timeout before falling back to this same aggregate,
+    // turning a 3-round resolve into tens of seconds. Determinism beats
+    // saving a trivial job.
+    def pinWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val out = GraftColumn.pinned(df)
       val s = out.agg(sum(col("lbl").cast("decimal(38,0)"))).head.getDecimal(0)
       (out, s) // s is null on empty input; Objects.equals handles it
     }
     // init ⊕ first propagate in one aggregation: every node of any edge,
     // labeled min(self, min neighbor)
-    var (labels, prevSum) = checkpointWithSum(
+    var (labels, prevSum) = pinWithSum(
       edges.groupBy(col("src").as("id"))
         .agg(min("dst").as("nmin"))
         .select(col("id"), least(col("id"), col("nmin")).as("lbl")))
@@ -127,25 +131,20 @@ object Clusters {
     var batches = 0
     var converged = false
     while (!converged && batches < maxBatches) {
-      // TWO doubling rounds per materialization: the dominant per-round
-      // cost at the low end is the FIXED job overhead of the checkpoint +
-      // convergence aggregate (scheduling, block registration), not the
-      // joins — batching halves the number of materialized jobs while the
-      // reached distance still compounds (2(d+1) per round, squared per
-      // batch). Monotonicity keeps the witness valid across a batch: an
+      // TWO doubling rounds per convergence check: the dominant per-round
+      // cost at the low end is the FIXED job overhead of the convergence
+      // aggregate (scheduling, a driver round trip), not the joins —
+      // batching halves the number of checks while the reached distance
+      // still compounds (2(d+1) per round, squared per batch).
+      // Monotonicity keeps the witness valid across a batch: an
       // unchanged sum over two rounds still ⟺ converged, and an extra
       // round on a converged graph is an idempotent no-op.
-      val (prop1, next1) = roundStep(edges, labels)
-      val (prop2, next2) = roundStep(edges, next1)
-      val (next, s) = checkpointWithSum(next2)
-      prop1.unpersist(blocking = false)
-      prop2.unpersist(blocking = false)
+      val (next, s) = pinWithSum(roundStep(edges, roundStep(edges, labels)))
       converged = java.util.Objects.equals(s, prevSum)
       prevSum = s
       labels = next
       batches += 1
     }
-    edges.unpersist(blocking = false)
     if (!converged && batches >= maxBatches)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxBatches batches " +
@@ -195,30 +194,28 @@ object Clusters {
   }
 
   /** One propagation round's plan, exposed for plan-shape assertions:
-    * returns (prop — persisted, caller unpersists after materializing
-    * `next`; next — the un-checkpointed round result). Every join is a
-    * key equality (id / lbl) — the shape that keeps each round a pair of
-    * hash-partitioned shuffles at any graph size. */
-  private[graft] def roundStep(edges: DataFrame, labels: DataFrame): (DataFrame, DataFrame) = {
+    * the round's labels, with the propagated intermediate `prop` pinned
+    * (its shuffle stages run here) so the compress self-join computes it
+    * once. Every join is a key equality (id / lbl) — the shape that keeps
+    * each round a pair of hash-partitioned shuffles at any graph size. */
+  private[graft] def roundStep(edges: DataFrame, labels: DataFrame): DataFrame = {
     // propagate: the min label in v's neighborhood (map-side partial min,
     // one shuffle on dst)
     val nbrMin = edges
       .join(labels.select(col("id").as("src"), col("lbl")), "src")
       .groupBy(col("dst")).agg(min("lbl").as("nlbl"))
       .select(col("dst").as("id"), col("nlbl"))
-    val prop = labels.join(nbrMin, Seq("id"), "left")
+    val prop = GraftColumn.pinned(labels.join(nbrMin, Seq("id"), "left")
       .select(col("id"),
-        least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
-      .persist(StorageLevel.MEMORY_AND_DISK) // self-joined below — computed once
+        least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
     // compress: follow the label pointer one hop — label(label(v)).
     // Valid because lbl(v) is always the id of a node CONNECTED to v
     // (labels start as own ids and only ever take a neighbor's label),
     // so its label is also connected; monotone (labels only decrease).
-    val next = prop
+    prop
       .join(prop.select(col("id").as("lbl"), col("lbl").as("plbl")), Seq("lbl"), "left")
       .select(col("id"),
         least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
-    (prop, next)
   }
 
   /** Near-dup-aware dedup: keep ONE document per cluster (the minimum id),

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Link-graph scoring for corpus curation: PageRank (Page et al. 1999,
   * "The PageRank Citation Ranking") over an arbitrary edge list. Web-scale
@@ -16,10 +15,16 @@ import org.apache.spark.storage.StorageLevel
   * iteration is two hash-partitioned equi-joins keyed on the node id plus
   * one partial-aggregated sum keyed on dst — no driver-side state except
   * the 1-row dangling-mass aggregate (a bounded artifact, like the CC
-  * convergence sum). Edges and out-degrees are persisted once and reused
-  * every round; each round's ranks are `localCheckpoint`ed so lineage (and
-  * analysis cost) stays constant per iteration. State is O(|nodes|), one
-  * double per node.
+  * convergence sum). State is O(|nodes|), one double per node.
+  *
+  * Lineage: every operator returns one plan that Spark recomputes from
+  * lineage after losing an executor; a frame read more than once, and
+  * each loop round's result, is shared through `GraftColumn.pinned`
+  * placed after its exchange, which also keeps a round's plan flat. Two
+  * costs follow: pinning runs the shuffle-map stages when the operator
+  * is called, and a loop's result keeps every round's shuffle files
+  * referenced until the result is dropped (the loops here run a fixed
+  * or capped number of rounds).
   */
 object Graph {
 
@@ -37,6 +42,60 @@ object Graph {
       .where(col("src") =!= col("dst"))
       .distinct()
 
+  /** The directed edge list as (src, dst) string ids; an edge with a NULL
+    * endpoint names no node and is dropped. */
+  private def directed(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull)
+
+  /** [[directed]] edges and their node set (id), both pinned: the
+    * ranking loops read them every round. */
+  private def edgesAndNodes(edges: DataFrame, srcCol: String,
+      dstCol: String): (DataFrame, DataFrame) = {
+    val e = GraftColumn.pinned(directed(edges, srcCol, dstCol))
+    (e, GraftColumn.pinned(
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()))
+  }
+
+  /** The undirected simple graph under `edges`: one (a, b) row per linked
+    * pair, a < b as strings. Direction, duplicates and self-loops are
+    * normalized away, and so are NULL endpoints (`least`/`greatest` skip
+    * a NULL, leaving a = b). Pinned after the distinct's exchange: every
+    * caller reads it more than once. */
+  private def undirected(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    GraftColumn.pinned(edges.select(
+        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
+        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
+      .where(col("a") =!= col("b")).distinct())
+
+  /** The power iteration shared by [[pageRank]] and
+    * [[personalizedPageRank]]: ranks start at `r0`, and each round sets
+    * every node's rank to `update(c, s)`, where `c` is the rank/outdeg
+    * mass arriving along its in-edges and `s` the total rank on dangling
+    * nodes (no out-edges). */
+  private def rankIteration(e: DataFrame, nodes: DataFrame, r0: Column,
+      iterations: Int)(update: (Column, Double) => Column): DataFrame = {
+    val deg = GraftColumn.pinned(
+      e.groupBy("src").agg(count(lit(1L)).cast("double").as("outdeg")))
+    var ranks = nodes.select(col("id"), r0.as("r"))
+    for (_ <- 1 to iterations) {
+      // dangling mass: 1-row aggregate over nodes with no out-edges
+      // (anti join on the degree table) — the only driver scalar per round
+      val s = ranks.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
+        .agg(coalesce(sum("r"), lit(0.0))).head.getDouble(0)
+      // contribution pass: rank/outdeg shipped along edges, partial-
+      // aggregated map-side before the dst shuffle
+      val contrib = e
+        .join(ranks.select(col("id").as("src"), col("r")), "src")
+        .join(deg, "src")
+        .groupBy(col("dst").as("id"))
+        .agg(sum(col("r") / col("outdeg")).as("c"))
+      ranks = GraftColumn.pinned(nodes.join(contrib, Seq("id"), "left")
+        .select(col("id"), update(coalesce(col("c"), lit(0.0)), s).as("r")))
+    }
+    ranks
+  }
+
   /** Fixed-iteration PageRank with uniform teleport and dangling-mass
     * redistribution:
     *
@@ -52,47 +111,17 @@ object Graph {
     *
     * Returns (id, r) — r sums to 1 over the node set (up to float
     * association). Node ids are taken as strings (domain/host/word keys);
-    * numeric graphs cast transparently. */
+    * numeric graphs cast transparently. An edge with a NULL endpoint is
+    * dropped, as in every operator here. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 3, damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count().toDouble // also materializes the persisted node set
-    val deg = e.groupBy("src").agg(count(lit(1L)).cast("double").as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("r")).localCheckpoint(true)
-    var it = 0
-    while (it < iterations) {
-      // dangling mass: 1-row aggregate over nodes with no out-edges
-      // (anti join on the persisted degree table) — the only driver
-      // scalar per round
-      val s = ranks.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-        .agg(coalesce(sum("r"), lit(0.0))).head.getDouble(0)
-      // contribution pass: rank/outdeg shipped along edges, partial-
-      // aggregated min-side before the dst shuffle
-      val contrib = e
-        .join(ranks.select(col("id").as("src"), col("r")), "src")
-        .join(deg, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("r") / col("outdeg")).as("c"))
-      val next = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit((1 - damping) / n) +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) + lit(s / n))).as("r"))
-        .localCheckpoint(true)
-      ranks = next
-      it += 1
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
+    val n = nodes.count().toDouble
+    rankIteration(e, nodes, lit(1.0 / n), iterations) { (c, s) =>
+      lit((1 - damping) / n) + lit(damping) * (c + lit(s / n))
     }
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    ranks
   }
 
   /** Directed-graph reciprocity + dyad census: how many linked node
@@ -108,13 +137,11 @@ object Graph {
     * (n_edges, n_dyads, n_mutual, n_asym, reciprocity). */
   def reciprocity(edges: DataFrame, srcCol: String,
       dstCol: String, dp: Int = 6): DataFrame = {
-    val e = edges.select(col(srcCol).cast("string").as("s"),
-        col(dstCol).cast("string").as("d"))
-      .where(col("s") =!= col("d"))
-      .distinct()
-      .localCheckpoint(true) // counted once, self-joined once
+    // counted once, self-joined once
+    val e = GraftColumn.pinned(directed(edges, srcCol, dstCol)
+      .where(col("src") =!= col("dst")).distinct())
     val mutual = e.join(
-        e.select(col("d").as("s"), col("s").as("d")), Seq("s", "d"))
+        e.select(col("dst").as("src"), col("src").as("dst")), Seq("src", "dst"))
       .agg(count(lit(1L)).as("__m2")) // each mutual dyad counted twice
     val tot = e.agg(count(lit(1L)).as("n_edges"))
     tot.crossJoin(mutual).select(
@@ -140,49 +167,22 @@ object Graph {
     * Per-round cost/discipline is [[pageRank]]'s exactly: one
     * node-keyed equi-join contribution pass (partial-aggregated before
     * the dst shuffle), a 1-row dangling aggregate as the only driver
-    * scalar, localCheckpoint'ed ranks so the lineage stays flat. */
+    * scalar; the two share one loop and differ only in the teleport
+    * term. */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[String], iterations: Int = 3,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(seeds.nonEmpty, "need at least one seed node")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     val isSeed = col("id").isin(seeds: _*)
     val k = nodes.where(isSeed).count().toDouble
     require(k > 0, s"none of the ${seeds.size} seeds appears in the graph")
     val seedMass = when(isSeed, lit(1.0 / k)).otherwise(lit(0.0))
-    val deg = e.groupBy("src").agg(count(lit(1L)).cast("double").as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = nodes.select(col("id"), seedMass.as("r")).localCheckpoint(true)
-    var it = 0
-    while (it < iterations) {
-      val s = ranks.join(deg.select(col("src").as("id")), Seq("id"), "left_anti")
-        .agg(coalesce(sum("r"), lit(0.0))).head.getDouble(0)
-      val contrib = e
-        .join(ranks.select(col("id").as("src"), col("r")), "src")
-        .join(deg, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(col("r") / col("outdeg")).as("c"))
-      val next = nodes.join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(1 - damping) * seedMass +
-            lit(damping) * (coalesce(col("c"), lit(0.0)) +
-              lit(s) * seedMass)).as("r"))
-        .localCheckpoint(true)
-      ranks = next
-      it += 1
+    rankIteration(e, nodes, seedMass, iterations) { (c, s) =>
+      lit(1 - damping) * seedMass + lit(damping) * (c + lit(s) * seedMass)
     }
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
-    ranks
   }
 
   /** Fixed-iteration HITS (Kleinberg, JACM 1999): mutually-recursive hub
@@ -198,45 +198,74 @@ object Graph {
     *
     * Same per-round discipline as [[pageRank]]: each half-step is one
     * node-keyed equi-join + one partial-aggregated sum; the only driver
-    * scalar is the 1-row L2 norm; scores are localCheckpoint'ed so
-    * lineage stays constant. Fixed iterations keep the result exactly
-    * restatable by an unrolled SQL oracle. Returns (id, hub, auth). */
+    * scalar is the 1-row L2 norm. Fixed iterations keep the result
+    * exactly restatable by an unrolled SQL oracle. Returns (id, hub,
+    * auth), empty for an empty edge list. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"), col(dstCol).cast("string").as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    nodes.count() // materialize the persisted node set
+    val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     def normalized(raw: DataFrame, scoreCol: String): DataFrame = {
-      // 1-row L2 norm: the only driver scalar per half-step; an edgeless
-      // graph cannot reach here (nodes come from edges)
+      // 1-row L2 norm: the only driver scalar per half-step. It is 0 only
+      // for an empty node set: every edge gives its dst a positive
+      // authority and its src a positive hub score.
       val norm = math.sqrt(raw.agg(
         coalesce(sum(col(scoreCol) * col(scoreCol)), lit(0.0))).head.getDouble(0))
-      require(norm > 0, "HITS norm collapsed to 0 — empty edge set?")
-      nodes.join(raw, Seq("id"), "left")
-        .select(col("id"), (coalesce(col(scoreCol), lit(0.0)) / norm).as(scoreCol))
-        .localCheckpoint(true)
+      val score = coalesce(col(scoreCol), lit(0.0))
+      GraftColumn.pinned(nodes.join(raw, Seq("id"), "left")
+        .select(col("id"), (if (norm > 0) score / norm else score).as(scoreCol)))
     }
-    var hubs = nodes.select(col("id"), lit(1.0).as("h")).localCheckpoint(true)
+    var hubs = nodes.select(col("id"), lit(1.0).as("h"))
     var auths: DataFrame = null
-    var it = 0
-    while (it < iterations) {
+    for (_ <- 1 to iterations) {
       auths = normalized(
         e.join(hubs.select(col("id").as("src"), col("h")), "src")
           .groupBy(col("dst").as("id")).agg(sum("h").as("a")), "a")
       hubs = normalized(
         e.join(auths.select(col("id").as("dst"), col("a")), "dst")
           .groupBy(col("src").as("id")).agg(sum("a").as("h")), "h")
-      it += 1
     }
-    val out = hubs.join(auths, "id").select(col("id"), col("h").as("hub"), col("a").as("auth"))
-    e.unpersist(blocking = false)
-    nodes.unpersist(blocking = false)
-    out
+    hubs.join(auths, "id").select(col("id"), col("h").as("hub"), col("a").as("auth"))
+  }
+
+  /** k-core subgraph: iteratively peel nodes of degree < k from the
+    * undirected simple graph until a fixpoint — the standard dense-
+    * region extractor (spam-cluster mining, community seeds, the
+    * "remove the long tail" step before expensive per-node scoring).
+    * Returns the surviving nodes with their in-core degree (≥ k by the
+    * fixpoint).
+    *
+    * Scale shape ([[Clusters]]' loop discipline): each round is one
+    * degree aggregate + two node-keyed LEFT SEMI joins, with the
+    * surviving edge set pinned so the round's plan stays flat; the
+    * only driver scalar per round is the surviving-edge count (the
+    * convergence test). Rounds are data-dependent but bounded by the
+    * peeling depth — `maxRounds` guards pathological chains (a path
+    * graph peels one layer per round), matching the CC resolver's
+    * round-cap contract. */
+  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
+      maxRounds: Int = 50): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    var c = undirected(edges, srcCol, dstCol)
+    var n = c.count()
+    var rounds = 0
+    var converged = n == 0
+    while (!converged) {
+      require(rounds < maxRounds,
+        s"k-core peeling did not converge in $maxRounds rounds")
+      val deg = c.select(col("a").as("id")).union(c.select(col("b")))
+        .groupBy("id").agg(count(lit(1L)).as("deg"))
+      val keep = deg.where(col("deg") >= k).select("id")
+      val pruned = GraftColumn.pinned(c
+        .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
+        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
+      val m = pruned.count()
+      converged = m == n
+      c = pruned; n = m
+      rounds += 1
+    }
+    c.select(col("a").as("id")).union(c.select(col("b")))
+      .groupBy("id").agg(count(lit(1L)).as("core_degree"))
   }
 
   /** Triangle count + global clustering coefficient of the UNDIRECTED
@@ -255,60 +284,9 @@ object Graph {
     * on the (least, greatest) pair key. Everything is joins +
     * partial-aggregated counts; the single-row output is the only
     * collapse. */
-  /** k-core subgraph: iteratively peel nodes of degree < k from the
-    * undirected simple graph until a fixpoint — the standard dense-
-    * region extractor (spam-cluster mining, community seeds, the
-    * "remove the long tail" step before expensive per-node scoring).
-    * Returns the surviving nodes with their in-core degree (≥ k by the
-    * fixpoint).
-    *
-    * Scale shape ([[Clusters]]' loop discipline): each round is one
-    * degree aggregate + two node-keyed LEFT SEMI joins, with the
-    * surviving edge set `localCheckpoint`ed so lineage stays constant;
-    * the only driver scalar per round is the surviving-edge count (the
-    * convergence test). Rounds are data-dependent but bounded by the
-    * peeling depth — `maxRounds` guards pathological chains (a path
-    * graph peels one layer per round), matching the CC resolver's
-    * round-cap contract. */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxRounds: Int = 50): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    var c = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    var n = c.count()
-    var rounds = 0
-    var converged = n == 0
-    while (!converged) {
-      require(rounds < maxRounds,
-        s"k-core peeling did not converge in $maxRounds rounds")
-      val deg = c.select(col("a").as("id")).union(c.select(col("b")))
-        .groupBy("id").agg(count(lit(1L)).as("deg"))
-      val keep = deg.where(col("deg") >= k).select("id")
-      val pruned = c
-        .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
-        .localCheckpoint(true)
-      val m = pruned.count()
-      converged = m == n
-      c = pruned; n = m
-      rounds += 1
-    }
-    c.select(col("a").as("id")).union(c.select(col("b")))
-      .groupBy("id").agg(count(lit(1L)).as("core_degree"))
-  }
-
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String,
       dp: Int = 6): DataFrame = {
-    val c = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      // eager localCheckpoint: the canonical set is scanned three times
-      // (degrees, wedge closure, |E|); blocks release when unreferenced
-      .localCheckpoint(true)
+    val c = undirected(edges, srcCol, dstCol)
     val deg = c.select(col("a").as("id")).union(c.select(col("b")))
       .groupBy("id").agg(count(lit(1L)).as("deg"))
     val da = deg.select(col("id").as("a"), col("deg").as("__da"))
@@ -327,13 +305,13 @@ object Graph {
         greatest(col("v"), col("w")) === col("y"))
       .agg(count(lit(1L)).as("n_triangles"))
     val degAgg = deg.agg(count(lit(1L)).as("n_nodes"),
-      (sum(col("deg") * (col("deg") - 1)) / 2).cast("long").as("n_wedges"))
-    val out = tri.crossJoin(degAgg).crossJoin(c.agg(count(lit(1L)).as("n_edges")))
+      (coalesce(sum(col("deg") * (col("deg") - 1)), lit(0L)) / 2).cast("long")
+        .as("n_wedges"))
+    tri.crossJoin(degAgg).crossJoin(c.agg(count(lit(1L)).as("n_edges")))
       .select(col("n_nodes"), col("n_edges"), col("n_triangles"), col("n_wedges"),
         round(when(col("n_wedges") > 0,
             col("n_triangles") * lit(3.0) / col("n_wedges"))
           .otherwise(lit(0.0)), dp).as("global_clustering"))
-    out
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
@@ -354,34 +332,27 @@ object Graph {
     * ONE node-keyed equi-join (neighbor label lookup), one
     * (node, label)-keyed partial-aggregated count, and one per-node
     * window top-1 (WindowGroupLimit prunes before the final sort);
-    * labels are `localCheckpoint`ed per round so lineage stays
-    * constant. State is one label per node. */
+    * each round's labels are pinned so its plan stays flat. State is one
+    * label per node. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iterations: Int): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     import org.apache.spark.sql.expressions.Window
-    val c = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
-    // both directions once; reused every round
+    val c = undirected(edges, srcCol, dstCol)
+    // both directions of the pinned edge set, read every round
     val und = c.select(col("a").as("id"), col("b").as("nbr"))
       .union(c.select(col("b").as("id"), col("a").as("nbr")))
-      .localCheckpoint(true)
     var labels = und.select(col("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
-      .localCheckpoint(true)
     val top = Window.partitionBy(col("id"))
       .orderBy(col("__c").desc, col("lbl").asc)
     for (_ <- 1 to iterations) {
-      labels = und
+      labels = GraftColumn.pinned(und
         .join(labels.withColumnRenamed("id", "nbr"), "nbr")
         .groupBy(col("id"), col("lbl")).agg(count(lit(1L)).as("__c"))
         .withColumn("__rn", row_number().over(top))
         .where(col("__rn") === 1)
-        .select(col("id"), col("lbl"))
-        .localCheckpoint(true)
+        .select(col("id"), col("lbl")))
     }
     labels.withColumnRenamed("lbl", "community")
   }
@@ -403,11 +374,7 @@ object Graph {
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxPivotDegree: Int = 1000, dp: Int = 6): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val c = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true)
+    val c = undirected(edges, srcCol, dstCol)
     val und = c.select(col("a").as("z"), col("b").as("n"))
       .union(c.select(col("b").as("z"), col("a").as("n")))
     val deg = und.groupBy("z").agg(count(lit(1L)).as("deg"))
@@ -443,11 +410,7 @@ object Graph {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       labels: DataFrame, idCol: String, communityCol: String,
       dp: Int = 6): DataFrame = {
-    val c = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true) // read by m, the tag join, and degrees
+    val c = undirected(edges, srcCol, dstCol)
     val m = c.agg(count(lit(1L)).cast("double").as("__m"))
     val lab = labels.select(col(idCol).cast("string").as("__id"),
       col(communityCol).cast("string").as("__cm"))
@@ -488,11 +451,7 @@ object Graph {
     * verdict. r is NULL for a degree-regular graph (0 variance). */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
       dstCol: String, dp: Int = 6): DataFrame = {
-    val c = edges.select(
-        least(col(srcCol).cast("string"), col(dstCol).cast("string")).as("a"),
-        greatest(col(srcCol).cast("string"), col(dstCol).cast("string")).as("b"))
-      .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(true) // read by the degree rollup and both joins
+    val c = undirected(edges, srcCol, dstCol)
     val sym = c.select(col("a").as("__s"), col("b").as("__d"))
       .unionByName(c.select(col("b").as("__s"), col("a").as("__d")))
     val deg = sym.groupBy("__s").agg(count(lit(1L)).as("__deg"))

@@ -78,13 +78,19 @@ class ExecutorLossSpec extends SparkSuite {
   test("ivfKnn gives the same answer after losing an executor") {
     runChild("ivf")
   }
+
+  test("pageRank, degreeAssortativity and connectedComponents give the same answer " +
+    "after losing an executor") {
+    runChild("graph")
+  }
 }
 
 /** Child-JVM body of [[ExecutorLossSpec]]:
-  * `ExecutorLossMain <jaccard|minhash|ivf> <fixture dir>`. Builds the
-  * operator's result, reads it once, kills executor 0, waits until the
-  * status tracker no longer lists it, reads the result again and prints
-  * `<op> same answer …` when both reads agree. */
+  * `ExecutorLossMain <jaccard|minhash|ivf|graph> <fixture dir>`. Builds
+  * the case's results (`graph` builds three), reads each once, kills
+  * executor 0, waits until the status tracker no longer lists it, reads
+  * each again and prints `<op> same answer …` when every pair of reads
+  * agrees. */
 object ExecutorLossMain {
 
   def main(args: Array[String]): Unit = {
@@ -103,35 +109,48 @@ object ExecutorLossMain {
     spark.sparkContext.setLogLevel("WARN")
     try {
       awaitExecutors(spark.sparkContext, 2)
-      val result = build(spark, op, dir)
-      val before = answer(result)
-      require(before._1 > 0, s"$op: empty result, the check would be vacuous")
+      val results = build(spark, op, dir)
+      val before = results.map(answer)
+      require(before.forall(_._1 > 0), s"$op: empty result, the check would be vacuous")
       require(spark.sparkContext.killExecutor("0"), "executor 0 was not killed")
       awaitExecutors(spark.sparkContext, 1)
-      val after = answer(result)
+      val after = results.map(answer)
       require(after == before, s"$op: answer changed after executor loss: $before vs $after")
-      println(s"$op same answer (rows, checksum) = $before")
+      println(s"$op same answer (rows, checksum) = ${before.mkString(", ")}")
     } finally spark.stop()
   }
 
-  private def build(spark: SparkSession, op: String, dir: String): DataFrame = op match {
+  private def build(spark: SparkSession, op: String, dir: String): Seq[DataFrame] = op match {
     case "jaccard" =>
-      graft.functions.Dedup.jaccardNearDupPairs(docs(spark, dir), "doc_id", "text")
+      Seq(graft.functions.Dedup.jaccardNearDupPairs(docs(spark, dir), "doc_id", "text"))
     case "minhash" =>
-      graft.functions.Dedup.minhashNearDupPairs(docs(spark, dir), "doc_id", "text")
+      Seq(graft.functions.Dedup.minhashNearDupPairs(docs(spark, dir), "doc_id", "text"))
     case "ivf" =>
       val emb = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
       val q = emb.where(col("vec_id") < 40)
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      graft.functions.Ivf.ivfKnn(emb, "vec_id", "embedding", q, "qid", "qvec", k = 5)
+      Seq(graft.functions.Ivf.ivfKnn(emb, "vec_id", "embedding", q, "qid", "qvec", k = 5))
+    case "graph" =>
+      import graft.functions.{Clusters, Graph}
+      val words = Graph.wordCooccurrenceEdges(docs(spark, dir), "text")
+      // a 4,000-node chain needs several doubling batches
+      val chain = spark.range(1, 4000).select(col("id").as("a"), (col("id") + 1).as("b"))
+      Seq(Graph.pageRank(words, "src", "dst"),
+        Graph.degreeAssortativity(words, "src", "dst"),
+        Clusters.connectedComponents(chain, "a", "b", localEdgeLimit = 0))
   }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
 
-  /** (rows, order-independent checksum) of a result, in one action. */
+  /** (rows, order-independent checksum) of a result, in one action.
+    * Doubles are rounded to 9 places first: a recomputed floating-point
+    * sum may merge its partial sums in another order. */
   private def answer(df: DataFrame): (Long, Long) = {
-    val r = df.agg(count(lit(1L)), coalesce(sum(hash(df.columns.map(col): _*).cast("long")), lit(0L)))
+    val cols = df.schema.fields.map(f =>
+      if (f.dataType == org.apache.spark.sql.types.DoubleType) round(col(f.name), 9)
+      else col(f.name))
+    val r = df.agg(count(lit(1L)), coalesce(sum(hash(cols.toSeq: _*).cast("long")), lit(0L)))
       .head()
     (r.getLong(0), r.getLong(1))
   }

@@ -235,5 +235,56 @@ class GraphSpec extends SparkSuite {
       .degreeAssortativity(messy, "src", "dst").head()
     assert(rm.getLong(0) == 3 && rm.getDouble(1) == -1.0, s"$rm")
   }
-}
 
+  test("an edge with a NULL endpoint names no node: ranks and scores keep their norms") {
+    // with the NULL endpoints dropped the graph is the 3-cycle a→b→c→a
+    val edges = Seq[(String, String)](("a", "b"), ("b", "c"), ("c", "a"),
+      ("a", null), (null, "b")).toDF("s", "d")
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => Option(r.getString(0)) -> r.getDouble(1)).toMap
+    // a cycle keeps PageRank's uniform start: 1/3 each, summing to 1
+    val pr = scores(Graph.pageRank(edges, "s", "d", iterations = 2))
+    assert(pr.keySet == Set(Some("a"), Some("b"), Some("c")), s"$pr")
+    pr.values.foreach(r => assert(math.abs(r - 1.0 / 3) < 1e-12, s"$pr"))
+    // seed a: iter1 a=.15 b=.85 c=0; iter2 a=.15 b=.85·.15 c=.85·.85
+    val ppr = scores(Graph.personalizedPageRank(edges, "s", "d", Seq("a"), iterations = 2))
+    assert(ppr.keySet == Set(Some("a"), Some("b"), Some("c")), s"$ppr")
+    assert(math.abs(ppr(Some("a")) - 0.15) < 1e-12 &&
+      math.abs(ppr(Some("b")) - 0.1275) < 1e-12 &&
+      math.abs(ppr(Some("c")) - 0.7225) < 1e-12, s"$ppr")
+    // every node is one hub and one authority: 1/√3 each, L2 norm 1
+    val h = Graph.hits(edges, "s", "d", iterations = 1).collect()
+    assert(h.map(r => Option(r.getString(0))).toSet == Set(Some("a"), Some("b"), Some("c")),
+      h.mkString(","))
+    h.foreach { r =>
+      assert(math.abs(r.getDouble(1) - 1 / math.sqrt(3)) < 1e-12 &&
+        math.abs(r.getDouble(2) - 1 / math.sqrt(3)) < 1e-12, h.mkString(","))
+    }
+  }
+
+  test("every operator on an empty edge list: an empty frame or its zero row") {
+    val e = Seq.empty[(String, String)].toDF("src", "dst")
+    def empty(df: org.apache.spark.sql.DataFrame, cols: String*): Unit = {
+      assert(df.columns.toSeq == cols, df.columns.mkString(","))
+      assert(df.count() == 0, df.collect().mkString(","))
+    }
+    empty(Graph.wordCooccurrenceEdges(Seq.empty[String].toDF("text"), "text"), "src", "dst")
+    empty(Graph.pageRank(e, "src", "dst"), "id", "r")
+    empty(Graph.hits(e, "src", "dst"), "id", "hub", "auth")
+    empty(Graph.kCore(e, "src", "dst", k = 1), "id", "core_degree")
+    empty(Graph.labelPropagation(e, "src", "dst", iterations = 2), "id", "community")
+    empty(Graph.adamicAdar(e, "src", "dst", k = 5), "u", "v", "aa_score", "n_common")
+    empty(Graph.modularity(e, "src", "dst", Seq.empty[(String, String)].toDF("id", "c"),
+      "id", "c"), "community", "intra_edges", "degree_mass", "q_c")
+    // no node can be a seed
+    intercept[IllegalArgumentException](Graph.personalizedPageRank(e, "src", "dst", Seq("a")))
+    // the 1-row summaries count zero; reciprocity and assortativity are
+    // undefined (NULL), the clustering coefficient of no wedges is 0
+    val rc = Graph.reciprocity(e, "src", "dst").collect()
+    assert(rc.map(_.toSeq).toSeq == Seq(Seq[Any](0L, 0L, 0L, 0L, null)), rc.mkString(","))
+    val tri = Graph.triangleStats(e, "src", "dst").collect()
+    assert(tri.map(_.toSeq).toSeq == Seq(Seq[Any](0L, 0L, 0L, 0L, 0.0)), tri.mkString(","))
+    val da = Graph.degreeAssortativity(e, "src", "dst").collect()
+    assert(da.map(_.toSeq).toSeq == Seq(Seq[Any](0L, null)), da.mkString(","))
+  }
+}
