@@ -194,20 +194,12 @@ object Clusters {
   }
 
   /** One propagation round's plan, exposed for plan-shape assertions:
-    * the round's labels, with the propagated intermediate `prop` pinned
-    * (its shuffle stages run here) so the compress self-join computes it
+    * the round's labels, with the [[propagate]] intermediate pinned (its
+    * shuffle stages run here) so the compress self-join computes it
     * once. Every join is a key equality (id / lbl) — the shape that keeps
     * each round a pair of hash-partitioned shuffles at any graph size. */
   private[graft] def roundStep(edges: DataFrame, labels: DataFrame): DataFrame = {
-    // propagate: the min label in v's neighborhood (map-side partial min,
-    // one shuffle on dst)
-    val nbrMin = edges
-      .join(labels.select(col("id").as("src"), col("lbl")), "src")
-      .groupBy(col("dst")).agg(min("lbl").as("nlbl"))
-      .select(col("dst").as("id"), col("nlbl"))
-    val prop = GraftColumn.pinned(labels.join(nbrMin, Seq("id"), "left")
-      .select(col("id"),
-        least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl")))
+    val prop = GraftColumn.pinned(propagate(edges, labels))
     // compress: follow the label pointer one hop — label(label(v)).
     // Valid because lbl(v) is always the id of a node CONNECTED to v
     // (labels start as own ids and only ever take a neighbor's label),
@@ -216,6 +208,21 @@ object Clusters {
       .join(prop.select(col("id").as("lbl"), col("lbl").as("plbl")), Seq("lbl"), "left")
       .select(col("id"),
         least(col("lbl"), coalesce(col("plbl"), col("lbl"))).as("lbl"))
+  }
+
+  /** The propagate half of [[roundStep]], exposed for plan-shape
+    * assertions because the round reads it through a pinned leaf: each
+    * node takes the min label in its closed neighborhood (map-side
+    * partial min, one shuffle on dst, then an id-keyed join back to the
+    * labels). */
+  private[graft] def propagate(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val nbrMin = edges
+      .join(labels.select(col("id").as("src"), col("lbl")), "src")
+      .groupBy(col("dst")).agg(min("lbl").as("nlbl"))
+      .select(col("dst").as("id"), col("nlbl"))
+    labels.join(nbrMin, Seq("id"), "left")
+      .select(col("id"),
+        least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"))
   }
 
   /** Near-dup-aware dedup: keep ONE document per cluster (the minimum id),

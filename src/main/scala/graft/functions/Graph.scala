@@ -207,13 +207,13 @@ object Graph {
     val (e, nodes) = edgesAndNodes(edges, srcCol, dstCol)
     def normalized(raw: DataFrame, scoreCol: String): DataFrame = {
       // 1-row L2 norm: the only driver scalar per half-step. It is 0 only
-      // for an empty node set: every edge gives its dst a positive
-      // authority and its src a positive hub score.
+      // for an empty node set, where the division meets no row: every
+      // edge gives its dst a positive authority and its src a positive
+      // hub score.
       val norm = math.sqrt(raw.agg(
         coalesce(sum(col(scoreCol) * col(scoreCol)), lit(0.0))).head.getDouble(0))
-      val score = coalesce(col(scoreCol), lit(0.0))
       GraftColumn.pinned(nodes.join(raw, Seq("id"), "left")
-        .select(col("id"), (if (norm > 0) score / norm else score).as(scoreCol)))
+        .select(col("id"), (coalesce(col(scoreCol), lit(0.0)) / norm).as(scoreCol)))
     }
     var hubs = nodes.select(col("id"), lit(1.0).as("h"))
     var auths: DataFrame = null
@@ -237,7 +237,9 @@ object Graph {
     *
     * Scale shape ([[Clusters]]' loop discipline): each round is one
     * degree aggregate + two node-keyed LEFT SEMI joins, with the
-    * surviving edge set pinned so the round's plan stays flat; the
+    * surviving edge set repartitioned on `a` and pinned after that
+    * exchange, so the round's plan stays flat and each read of it
+    * replays one shuffle read, not every earlier round's filters; the
     * only driver scalar per round is the surviving-edge count (the
     * convergence test). Rounds are data-dependent but bounded by the
     * peeling depth — `maxRounds` guards pathological chains (a path
@@ -256,9 +258,16 @@ object Graph {
       val deg = c.select(col("a").as("id")).union(c.select(col("b")))
         .groupBy("id").agg(count(lit(1L)).as("deg"))
       val keep = deg.where(col("deg") >= k).select("id")
+      // pinned after an exchange on `a`. With `keep` broadcast the semi
+      // joins add none, and each of the next round's four reads would
+      // recompute every earlier round's filters: a 45-round peel of
+      // 45,500 edges took 64 s instead of 15 s (local[4]). When the semi
+      // joins shuffle, the last one is already keyed on `a` and the
+      // repartition plans as no exchange.
       val pruned = GraftColumn.pinned(c
+        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi")
         .join(keep.withColumnRenamed("id", "a"), Seq("a"), "left_semi")
-        .join(keep.withColumnRenamed("id", "b"), Seq("b"), "left_semi"))
+        .repartition(col("a")))
       val m = pruned.count()
       converged = m == n
       c = pruned; n = m

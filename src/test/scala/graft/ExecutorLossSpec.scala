@@ -135,7 +135,9 @@ object ExecutorLossMain {
       val words = Graph.wordCooccurrenceEdges(docs(spark, dir), "text")
       // a 4,000-node chain needs several doubling batches
       val chain = spark.range(1, 4000).select(col("id").as("a"), (col("id") + 1).as("b"))
-      Seq(Graph.pageRank(words, "src", "dst"),
+      // a recomputed floating-point sum may merge its partial sums in
+      // another order: the ranks are compared at 9 places
+      Seq(Graph.pageRank(words, "src", "dst").select(col("id"), round(col("r"), 9).as("r")),
         Graph.degreeAssortativity(words, "src", "dst"),
         Clusters.connectedComponents(chain, "a", "b", localEdgeLimit = 0))
   }
@@ -143,14 +145,9 @@ object ExecutorLossMain {
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")
 
-  /** (rows, order-independent checksum) of a result, in one action.
-    * Doubles are rounded to 9 places first: a recomputed floating-point
-    * sum may merge its partial sums in another order. */
+  /** (rows, order-independent checksum) of a result, in one action. */
   private def answer(df: DataFrame): (Long, Long) = {
-    val cols = df.schema.fields.map(f =>
-      if (f.dataType == org.apache.spark.sql.types.DoubleType) round(col(f.name), 9)
-      else col(f.name))
-    val r = df.agg(count(lit(1L)), coalesce(sum(hash(cols.toSeq: _*).cast("long")), lit(0L)))
+    val r = df.agg(count(lit(1L)), coalesce(sum(hash(df.columns.map(col): _*).cast("long")), lit(0L)))
       .head()
     (r.getLong(0), r.getLong(1))
   }

@@ -280,14 +280,23 @@ class PlanSpec extends SparkSuite with org.scalatest.BeforeAndAfterAll {
     val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
     val labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
+    // a regression to a non-equi join here becomes O(V·E) per round at
+    // scale. The round reads its propagate step through a pinned leaf,
+    // whose plan does not print, so the propagate joins (edges ⋈ labels
+    // on src, labels ⋈ nbrMin on id) are checked on their own plan.
+    val prop = plan(graft.functions.Clusters.propagate(edges, labels))
     val p = plan(graft.functions.Clusters.roundStep(edges, labels))
-    // a regression to a non-equi join here becomes O(V·E) per round at scale
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
-      s"CC round degraded to a non-equi join:\n$p")
+    for ((step, s) <- Seq("propagate" -> prop, "round" -> p))
+      assert(!s.contains("CartesianProduct") && !s.contains("BroadcastNestedLoopJoin"),
+        s"CC $step degraded to a non-equi join:\n$s")
+    assert(prop.contains("BroadcastHashJoin") || prop.contains("SortMergeJoin") ||
+      prop.contains("ShuffledHashJoin"), s"expected equi-joins in propagate:\n$prop")
     // the compress self-join reads prop twice: prop's propagate join
-    // (its least(lbl, coalesce(nlbl, lbl)) projection) must not be
-    // planned once per branch; exchange reuse alone would still plan it
-    // twice
+    // (its least(lbl, coalesce(nlbl, lbl)) projection, which the
+    // propagate plan prints once) must not be planned once per branch;
+    // exchange reuse alone would still plan it twice
+    assert("coalesce\\(nlbl".r.findAllMatchIn(prop).length == 1,
+      s"expected one propagate projection:\n$prop")
     assert("coalesce\\(nlbl".r.findAllMatchIn(p).length <= 1,
       s"prop computed once per self-join branch:\n$p")
   }
