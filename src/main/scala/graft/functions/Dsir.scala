@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 /** Data Selection via Importance Resampling (Xie et al., NeurIPS 2023):
@@ -37,13 +37,12 @@ object Dsir {
     def counts(df: DataFrame) =
       bucketTokens(df, Seq.empty, textCol, buckets)
         .groupBy("b").agg(count(lit(1L)).as("c"))
-    val joined = counts(target).withColumnRenamed("c", "ct")
+    // read twice (totals, weights): pinned after the count exchanges,
+    // so each read replays only the bucket-keyed join, never the corpus
+    val joined = GraftColumn.pinned(counts(target).withColumnRenamed("c", "ct")
       .join(counts(raw).withColumnRenamed("c", "cr"), Seq("b"), "full_outer")
       .select(col("b"), coalesce(col("ct"), lit(0L)).as("ct"),
-        coalesce(col("cr"), lit(0L)).as("cr"))
-      // eager + lineage-free: read twice (totals, weights); blocks are
-      // reclaimed by the ContextCleaner once the result ships
-      .localCheckpoint(true)
+        coalesce(col("cr"), lit(0L)).as("cr")))
     val totals = joined.agg(sum("ct").as("nt"), sum("cr").as("nr"),
       count(lit(1L)).as("v"))
     val w = joined.crossJoin(broadcast(totals))

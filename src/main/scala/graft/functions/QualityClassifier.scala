@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.HashingTF
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 /** Model-based quality filtering — the classifier step modern corpus
@@ -102,23 +102,23 @@ object QualityClassifier {
       numFeatures: Int = 1 << 20, bigrams: Boolean = true,
       lowercase: Boolean = true, regParam: Double = 1e-6,
       maxIter: Int = 100): Model = {
-    val feat = featurizer(numFeatures)
-    // persist the featurized labeled set: every L-BFGS iteration runs a
-    // treeAggregate over it, and without the cache each iteration would
-    // re-tokenize and re-hash the text from source — the labeled set is
-    // bounded by construction, so materializing it is the cheap side
-    val prepared = feat.transform(
+    // LogisticRegression blockifies its instances and caches the blocks
+    // itself (a cache here would hold a second copy), but it reads its
+    // input in more than one pass before that. The featurized set is
+    // therefore repartitioned and pinned after that exchange: the text
+    // is tokenized and hashed once, and each pass reads the shuffle
+    // output (pipeline_quality_clf at sf0.1: 3.6–3.9 s, against
+    // 4.7–5.4 s re-featurizing per pass, local[4])
+    val prepared = GraftColumn.pinned(featurizer(numFeatures).transform(
       labeled
         .withColumn(TokCol, featureTokens(col(textCol), lowercase, bigrams))
         .withColumn("__clf_label", col(labelCol).cast("double")))
       .select(FeatCol, "__clf_label")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val lr = new LogisticRegression()
-        .setFeaturesCol(FeatCol).setLabelCol("__clf_label")
-        .setRegParam(regParam).setElasticNetParam(0.0)
-        .setStandardization(false).setMaxIter(maxIter)
-      Model(lr.fit(prepared), numFeatures, bigrams, lowercase)
-    } finally { prepared.unpersist(); () }
+      .repartition(labeled.sparkSession.sessionState.conf.numShufflePartitions))
+    val lr = new LogisticRegression()
+      .setFeaturesCol(FeatCol).setLabelCol("__clf_label")
+      .setRegParam(regParam).setElasticNetParam(0.0)
+      .setStandardization(false).setMaxIter(maxIter)
+    Model(lr.fit(prepared), numFeatures, bigrams, lowercase)
   }
 }

@@ -148,9 +148,9 @@ object Sketches {
       s"need mgCapacity >= k > 0, got k=$k capacity=$mgCapacity")
     val spark = df.sparkSession
     import spark.implicits._
+    // a narrow scan: the candidate pass and the exact count each re-read it
     val gk = df.select(group.cast("string").as("g"), key.cast("string").as("w"))
       .where(col("g").isNotNull && col("w").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cands = gk.as[(String, String)]
       .mapPartitions { it =>
         val perGroup = scala.collection.mutable.HashMap
@@ -174,14 +174,11 @@ object Sketches {
       .groupBy("g", "w").agg(count(lit(1L)).as("n"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("g")).orderBy(col("n").desc, col("w"))
-    val out = exact
+    exact
       .withColumn("__rk", row_number().over(w))
       .where(col("__rk") <= k)
       .select(col("g").as("group"), col("w").as("key"), col("n"))
       .orderBy("group", "key")
-    val materialized = out.localCheckpoint(true)
-    gk.unpersist(blocking = false)
-    materialized
   }
 
   /** Top-k keys by estimated count, as a DataFrame (`key` string,

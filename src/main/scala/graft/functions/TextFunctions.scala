@@ -1,6 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale corpus pipelines: tokenization,
@@ -29,10 +31,23 @@ object TextFunctions {
     * 0.35–0.66s warm for both char and token kernels (probe logs in
     * OPTIMIZATION_r17.md) — the r16 rejection does not reproduce, and
     * eval_chrf's standing cold-cost regression (VERDICT r16 #4) was
-    * exactly this serial scan. */
+    * exactly this serial scan.
+    *
+    * The decision runs no Spark job. Below an exchange (or a subquery)
+    * the partition count is the one the physical plan declares, before
+    * adaptive execution runs anything; a narrow plan's count is its
+    * source splits, which building its RDD computes without a job. */
   private def widen(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= par) df else df.repartition(par)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    val n =
+      if (plan.exists(p => p.isInstanceOf[Exchange] || p.subqueries.nonEmpty))
+        plan.outputPartitioning.numPartitions
+      else df.queryExecution.toRdd.getNumPartitions
+    if (n >= par) df else df.repartition(par)
   }
 
   /** BPE-ish pre-tokenization: word runs OR single non-word-non-space
@@ -441,7 +456,6 @@ object TextFunctions {
         (1 to maxN).map(n => element_at(col("__ca"), n).as(s"__a$n")) ++
         (1 to maxN).map(n => element_at(col("__cb"), n).as(s"__b$n")): _*)
       .na.fill(0L)
-      .localCheckpoint(true) // observed agg + b-way replication read it
     def sums(w: Column) =
       Seq(sum(w * col("__la")).as("la"), sum(w * col("__lb")).as("lb"),
         sum(w * col("__lt")).as("lt")) ++
@@ -461,9 +475,6 @@ object TextFunctions {
           exp(logsum / maxN))
         .otherwise(lit(0.0))
     }
-    val obsSums = sums(lit(1L))
-    val obs = doc.agg(obsSums.head, obsSums.tail: _*)
-      .select(bleuOf("a", "la").as("__ba"), bleuOf("b", "lb").as("__bb"))
     // the poissonBootstrapMeanCI Poisson(1) inverse-CDF coin, verbatim
     val cdf = Seq(0.367879441, 0.735758882, 0.919698603, 0.981011843,
       0.996340153, 0.999405815, 0.999916758, 0.999989750)
@@ -472,19 +483,29 @@ object TextFunctions {
     val w = cdf.zipWithIndex.foldRight(lit(8): Column) {
       case ((p, k), rest) => when(u < p, k).otherwise(rest)
     }
+    // the observed corpus is replicate -1 with every weight 1, so ONE
+    // scan of the doc table and one (b+1)-group rollup give both the
+    // observed BLEUs and the replicate deltas
     val repSums = sums(col("__w").cast("long"))
-    val deltas = doc
-      .select(col("*"), explode(sequence(lit(0), lit(b - 1))).as("__r"))
-      .withColumn("__w", w)
+    val reps = doc
+      .select(col("*"), explode(sequence(lit(-1), lit(b - 1))).as("__r"))
+      .withColumn("__w", when(col("__r") < 0, lit(1)).otherwise(w))
       .groupBy("__r").agg(repSums.head, repSums.tail: _*)
-      .select(round(bleuOf("a", "la") - bleuOf("b", "lb"), dp).as("__d"))
-    val stats = deltas.agg(
+      .select(col("__r"), bleuOf("a", "la").as("__ra"),
+        bleuOf("b", "lb").as("__rb"))
+      .withColumn("__d",
+        when(col("__r") >= 0, round(col("__ra") - col("__rb"), dp)))
+    // an empty corpus has no replicate -1 row: its BLEUs are 0, as
+    // bleuOf reads empty sums
+    val stats = reps.agg(
+      coalesce(max(when(col("__r") < 0, col("__ra"))), lit(0.0)).as("__ba"),
+      coalesce(max(when(col("__r") < 0, col("__rb"))), lit(0.0)).as("__bb"),
       sum(when(col("__d") > 0, 1L).otherwise(0L)).as("n_a_wins"),
       sum(when(col("__d") < 0, 1L).otherwise(0L)).as("n_b_wins"),
       sum(when(col("__d") <= 0, 1L).otherwise(0L)).as("__le0"),
       sum(when(col("__d") >= 0, 1L).otherwise(0L)).as("__ge0"))
     val dObs = round(col("__ba") - col("__bb"), dp)
-    obs.crossJoin(stats).select(
+    stats.select(
       round(col("__ba"), dp).as("bleu_a"), round(col("__bb"), dp).as("bleu_b"),
       dObs.as("diff_obs"), lit(b).cast("long").as("n_replicates"),
       col("n_a_wins"), col("n_b_wins"),
@@ -677,12 +698,17 @@ object TextFunctions {
         expr("slice(w, 1, size(w)-1)"), expr("slice(w, 2, size(w)-1)"),
         (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
       .select(col("grp"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-      .localCheckpoint(true) // scanned twice (occ + bi rollups)
-    val occ = pos.groupBy("grp", "w1", "w2").agg(count(lit(1L)).as("cg"))
-    // the gram-bounded bigram table feeds FOUR derivations (cv, cw,
-    // n1all, p) — materialize it once instead of re-rolling pos
-    val bi = pos.groupBy("w1", "w2").agg(count(lit(1L)).as("cb"))
-      .localCheckpoint(true)
+    // ONE scan of the corpus: the per-group bigram counts are pinned
+    // after their exchange (the bigram table and the scoring join read
+    // them), and the gram-bounded bigram table, which feeds FOUR
+    // derivations (cv, cw, n1all, p), rolls up from them and is pinned
+    // after its own exchange. Re-scanning pos for a second rollup
+    // measured slower (text_kn_ppl at sf0.1: 1.26–1.41 s against
+    // 1.15–1.18 s, local[4])
+    val occ = GraftColumn.pinned(
+      pos.groupBy("grp", "w1", "w2").agg(count(lit(1L)).as("cg")))
+    val bi = GraftColumn.pinned(
+      occ.groupBy("w1", "w2").agg(sum(col("cg")).as("cb")))
     val cv = bi.groupBy("w1")
       .agg(sum(col("cb")).as("cv"), count(lit(1L)).as("n1fwd"))
     val cw = bi.groupBy("w2").agg(count(lit(1L)).as("n1back"))
@@ -1498,7 +1524,7 @@ object TextFunctions {
     // does NOT fire here: the optimizer collapses the `firsts` branch's
     // rollup pair into a direct per-term aggregate, de-canonicalizing
     // the two subtrees.)
-    val ts = org.apache.spark.sql.GraftColumn.pinned(
+    val ts = GraftColumn.pinned(
       toks.groupBy("t", "s").agg(count(lit(1L)).as("__c")))
     val perShard = ts.groupBy("s").agg(sum(col("__c")).as("__nt"))
     val firsts = ts.groupBy("t").agg(min(col("s")).as("s"))
@@ -1595,17 +1621,6 @@ object TextFunctions {
     }.reduce(_ unionByName _)
   }
 
-  /** Per-order modified n-gram precision table for corpus-level BLEU
-    * (Papineni et al., ACL 2002): candidate n-gram counts are CLIPPED by
-    * the same row's reference counts, summed over the corpus, divided by
-    * total candidate n-grams. Returns one row per order n ∈ [1, maxN]:
-    * (n, clipped, total, precision).
-    *
-    * Shape (r16): the clip is a within-row quantity — ONE shuffle-free
-    * scan through [[ClippedGramMatches]] and a 1-row aggregate cover
-    * every order (see [[bleuStats]]; the r11–r15 per-order
-    * rollup+join history and the scan-fusion measurements it cites
-    * are preserved there and in [[ngramDiversity]]). */
   /** Shared BLEU machinery (r16): ONE shuffle-free scan — tokenize,
     * compute every order's clipped matches in-row
     * ([[ClippedGramMatches]]), and fold clipped counts, gram totals
@@ -1636,7 +1651,7 @@ object TextFunctions {
           .as("cand_tokens"),
         coalesce(sum(size(col("__rt")).cast("long")), lit(0L))
           .as("ref_tokens"))
-    val statsRow = widen(df.select(
+    val stats = widen(df.select(
         col(candCol).as("__c0"), col(refCol).as("__r0")))
       .select(
         tokensWs(col("__c0")).as("__ct"), tokensWs(col("__r0")).as("__rt"))
@@ -1644,7 +1659,10 @@ object TextFunctions {
         GraftFunctions.clippedGramMatches(col("__ct"), col("__rt"), maxN)
           .as("__cl"))
       .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(true) // 1 row; perN, totals and callers read it
+    // 1 row; perN, totals and callers read it. Pinned after the
+    // aggregate's exchange: each read merges the partial rows again,
+    // never re-scans the corpus
+    val statsRow = GraftColumn.pinned(stats)
     val totals = statsRow.select(
       (1 to maxN).map(n => col(s"__t$n")) ++
         Seq(col("cand_tokens"), col("ref_tokens")): _*)
@@ -1655,6 +1673,17 @@ object TextFunctions {
     (perN, totals)
   }
 
+  /** Per-order modified n-gram precision table for corpus-level BLEU
+    * (Papineni et al., ACL 2002): candidate n-gram counts are CLIPPED by
+    * the same row's reference counts, summed over the corpus, divided by
+    * total candidate n-grams. Returns one row per order n ∈ [1, maxN]:
+    * (n, clipped, total, precision).
+    *
+    * Shape (r16): the clip is a within-row quantity — ONE shuffle-free
+    * scan through [[ClippedGramMatches]] and a 1-row aggregate cover
+    * every order (see [[bleuStats]]; the r11–r15 per-order
+    * rollup+join history and the scan-fusion measurements it cites
+    * are preserved there and in [[ngramDiversity]]). */
   def bleuPrecisions(df: DataFrame, idCol: String, candCol: String,
       refCol: String, maxN: Int = 4): DataFrame =
     bleuStats(df, idCol, candCol, refCol, maxN)._1

@@ -53,10 +53,28 @@ object GraftColumn {
     * demotes every downstream equi-join from broadcast to sort-merge
     * (measured r15 in-session: q_corr 2.3s → 5.2s with the stats-less
     * variant, back under the checkpoint-era time with stats). */
-  def pinned(df: DataFrame): DataFrame = {
+  def pinned(df: DataFrame): DataFrame = pin(df, df)
+
+  /** [[pinned]], with `planConf` set for this frame's own plan only. The
+    * frame is planned and compiled to its RDD in a clone of the session
+    * that carries the settings; the caller's session conf is never
+    * written, so queries running beside it on the same session never see
+    * them. A physical operator reads its settings from the session that
+    * was active when it was planned (`SparkPlan.conf`), and the pinned RDD
+    * keeps that plan for every later read. The plans that read the
+    * pinned frame are planned in the caller's session, without them. */
+  def pinned(df: DataFrame, planConf: Map[String, String]): DataFrame = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val scoped = ds.sparkSession.cloneSession()
+    planConf.foreach { case (k, v) => scoped.sessionState.conf.setConfString(k, v) }
+    pin(classic.Dataset.ofRows(scoped, ds.logicalPlan), df)
+  }
+
+  /** Compiles `planned` to its RDD and rewraps it in `home`'s session. */
+  private def pin(planned: DataFrame, home: DataFrame): DataFrame = {
+    val ds = planned.asInstanceOf[classic.Dataset[Row]]
     val rdd = ds.queryExecution.toRdd // finalizes AQE; one RDD instance
-    classic.Dataset.ofRows(ds.sparkSession,
+    classic.Dataset.ofRows(home.asInstanceOf[classic.Dataset[Row]].sparkSession,
       execution.LogicalRDD.fromDataset(rdd, ds, isStreaming = false))
   }
 }

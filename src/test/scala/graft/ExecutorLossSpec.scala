@@ -83,11 +83,17 @@ class ExecutorLossSpec extends SparkSuite {
     "after losing an executor") {
     runChild("graph")
   }
+
+  test("heapsFit, bitext mining, DSIR weights, Kneser-Ney scores, per-group heavy " +
+    "hitters and the Hopkins statistic give the same answer after losing an executor") {
+    runChild("text")
+  }
 }
 
 /** Child-JVM body of [[ExecutorLossSpec]]:
-  * `ExecutorLossMain <jaccard|minhash|ivf|graph> <fixture dir>`. Builds
-  * the case's results (`graph` builds three), reads each once, kills
+  * `ExecutorLossMain <jaccard|minhash|ivf|graph|text> <fixture dir>`.
+  * Builds the case's results (`graph` builds three, `text` seven), reads
+  * each once, kills
   * executor 0, waits until the status tracker no longer lists it, reads
   * each again and prints `<op> same answer …` when every pair of reads
   * agrees. */
@@ -140,6 +146,31 @@ object ExecutorLossMain {
       Seq(Graph.pageRank(words, "src", "dst").select(col("id"), round(col("r"), 9).as("r")),
         Graph.degreeAssortativity(words, "src", "dst"),
         Clusters.connectedComponents(chain, "a", "b", localEdgeLimit = 0))
+    case "text" =>
+      import graft.functions.{Dsir, Similarity, Sketches, TextFunctions}
+      val d = spark.read.parquet(s"$dir/documents.parquet")
+      val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+        .where(size(col("embedding")) === 64)
+      def side(parity: Int, id: String, vec: String) =
+        emb.where(col("label") % 2 === parity)
+          .select(col("vec_id").as(id), col("embedding").as(vec))
+      val (xs, ys) = (side(0, "xid", "xv"), side(1, "yid", "yv"))
+      // a margin divides by neighbourhood averages, which a recomputed
+      // aggregate may sum in another order: margins are compared at 9
+      // places; every other output is exact or rounded by the operator
+      def margins(df: DataFrame) = df.select(col("xid"), col("yid"), round(col("margin"), 9))
+      Seq(TextFunctions.heapsFit(d, col("doc_id") % 8, "text"),
+        margins(Similarity.marginBitextPairs(xs, "xid", "xv", ys, "yid", "yv",
+          k = 4, minMargin = 1.0, annPairThreshold = 0)),
+        margins(Similarity.marginBitextPairsAnn(xs, "xid", "xv", ys, "yid", "yv",
+          k = 4, minMargin = 1.0, nLists = 8, nProbe = 2)),
+        Dsir.importanceWeights(d.where(col("lang") === "en"), d.where(col("lang") =!= "en"),
+          "text"),
+        TextFunctions.kneserNeyBigramScores(d, "lang", "text"),
+        Sketches.heavyHittersPerGroup(
+          d.select(col("lang"), explode(split(col("text"), " ")).as("w")).where(col("w") =!= ""),
+          col("lang"), col("w"), k = 5),
+        Similarity.hopkinsStatistic(emb, "vec_id", "embedding", m = 16))
   }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
